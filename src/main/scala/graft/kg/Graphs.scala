@@ -2,6 +2,7 @@ package graft.kg
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Adaptive
 
 /**
  * Structural analytics over the materialized knowledge graph: triangle
@@ -27,6 +28,11 @@ object Graphs {
     scala.collection.concurrent.TrieMap.empty
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** Simple directed edge set (src, dst): self-loop-free, distinct. */
+  private def directed(edgesIn: DataFrame): DataFrame = edgesIn
+    .select(col("src").cast("long"), col("dst").cast("long"))
+    .filter(col("src") =!= col("dst")).distinct()
 
   /** Canonical simple undirected edge set: (a < b), self-loop-free,
     * distinct. ONE shuffle (the distinct). */
@@ -225,35 +231,34 @@ object Graphs {
    */
   def trussness(edgesIn: DataFrame,
                 smallGraphThreshold: Long = 100000L): DataFrame = {
-    val e0 = undirected(edgesIn).localCheckpoint(true)
-    val m = e0.count()
-    if (m == 0) return e0.withColumn("trussness", lit(0L))
-    if (m <= smallGraphThreshold) {
-      val edges = e0.collect().map(r => (r.getLong(0), r.getLong(1)))
-      return driverTruss(e0.sparkSession, edges)
-    }
-    var alive = e0
-    var nAlive = m
-    var k = 3
-    val peeled = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    while (nAlive > 0) {
-      var changed = true
-      while (changed && nAlive > 0) {
-        val sup = supportOf(alive).localCheckpoint(true)
-        val drop = sup.filter(col("support") < k - 2)
-          .select(col("a"), col("b")).localCheckpoint(true)
-        val nDrop = drop.count()
-        if (nDrop == 0) changed = false
-        else {
-          peeled += drop.withColumn("trussness", lit(k - 1L))
-          alive = alive.join(drop, Seq("a", "b"), "left_anti")
-            .localCheckpoint(true)
-          nAlive -= nDrop
+    val e = undirected(edgesIn)
+    Adaptive.small(e, smallGraphThreshold) { rows =>
+      if (rows.isEmpty) e.withColumn("trussness", lit(0L))
+      else driverTruss(edgesIn.sparkSession, Adaptive.pairs(rows))
+    } { alive0 =>
+      var alive = alive0
+      var nAlive = alive0.count()
+      var k = 3
+      val peeled = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      while (nAlive > 0) {
+        var changed = true
+        while (changed && nAlive > 0) {
+          val sup = supportOf(alive).localCheckpoint(true)
+          val drop = sup.filter(col("support") < k - 2)
+            .select(col("a"), col("b")).localCheckpoint(true)
+          val nDrop = drop.count()
+          if (nDrop == 0) changed = false
+          else {
+            peeled += drop.withColumn("trussness", lit(k - 1L))
+            alive = alive.join(drop, Seq("a", "b"), "left_anti")
+              .localCheckpoint(true)
+            nAlive -= nDrop
+          }
         }
+        k += 1
       }
-      k += 1
+      peeled.reduce(_ unionAll _)
     }
-    peeled.reduce(_ unionAll _)
   }
 
   /**
@@ -521,21 +526,8 @@ object Graphs {
     nDir.crossJoin(nRecip).crossJoin(sums)
   }
 
-  /** ADAPTIVE small-graph fallback threshold — the [[PageRank]] /
-    * [[graft.canon.ConnectedComponents]] convention: below this many
-    * edges the hop expansion runs on the driver (2 Spark jobs total
-    * instead of ~3 per level); the distributed loop is the scale path
-    * and stays equality-tested against it (GraphsSpec, threshold 0).
-    * Sized by what the two sides actually cost: the fallback is one
-    * bounded collect of ≤ 24 B/edge tuples (24 MB at the threshold —
-    * trivia for any driver) plus a memory-speed loop, while EACH
-    * distributed round pays ~3 scheduled jobs of fixed latency — an
-    * iterative operator on a 10^5–10^6-edge graph spends its whole
-    * runtime on round latency, not work (measured: 12 rounds over a
-    * 1.8·10^5-edge temporal graph = 113 jobs, seconds of scheduling for
-    * milliseconds of relaxation). Graphs past the threshold still take
-    * the distributed path, so the bound never grows with the corpus. */
-  val SmallGraphThreshold = 1000000L
+  /** Default edge bound of the driver fallback; see [[Adaptive.SmallGraphThreshold]]. */
+  val SmallGraphThreshold: Long = Adaptive.SmallGraphThreshold
 
   private def driverBfs(spark: org.apache.spark.sql.SparkSession,
                         edges: Array[(Long, Long)], seedIds: Array[Long],
@@ -596,39 +588,35 @@ object Graphs {
    * relation; rounds = graph depth, so a 20-deep hierarchy over 10^9
    * classes converges in 20 delta-joins on 8-byte keys. The adaptive
    * driver fallback (below [[SmallGraphThreshold]] edges) is the same
-   * 2-job escape hatch as BFS/CC/PageRank; the distributed loop is the
+   * one-probe escape hatch as BFS/CC/PageRank; the distributed loop is the
    * scale path and stays equality-tested against it at threshold 0.
    *
    * @return (src: long, dst: long), distinct, src != dst.
    */
   def transitiveClosure(edgesIn: DataFrame,
                         smallGraphThreshold: Long = SmallGraphThreshold): DataFrame = {
-    val edges = edgesIn
-      .select(col("src").cast("long"), col("dst").cast("long"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-    if (edges.count() <= smallGraphThreshold)
-      return driverClosure(edgesIn.sparkSession,
-        edges.collect().map(r => (r.getLong(0), r.getLong(1))))
-    val e = edges.repartition(col("src")).localCheckpoint(true)
-    var closure = edges.localCheckpoint(true)
-    var delta = closure
-    var done = false
-    while (!done) {
-      val next = delta.select(col("src").as("a"), col("dst").as("m"))
-        .join(e.select(col("src").as("m"), col("dst").as("b")), Seq("m"))
-        .select(col("a").as("src"), col("b").as("dst"))
-        .filter(col("src") =!= col("dst"))
-        .distinct()
-        .join(closure, Seq("src", "dst"), "left_anti")
-        .localCheckpoint(true)
-      if (next.isEmpty) done = true
-      else {
-        closure = closure.unionAll(next).localCheckpoint(true)
-        delta = next
+    Adaptive.small(directed(edgesIn), smallGraphThreshold)(rows =>
+      driverClosure(edgesIn.sparkSession, Adaptive.pairs(rows))) { edges =>
+      val e = edges.repartition(col("src")).localCheckpoint(true)
+      var closure = edges
+      var delta = closure
+      var done = false
+      while (!done) {
+        val next = delta.select(col("src").as("a"), col("dst").as("m"))
+          .join(e.select(col("src").as("m"), col("dst").as("b")), Seq("m"))
+          .select(col("a").as("src"), col("b").as("dst"))
+          .filter(col("src") =!= col("dst"))
+          .distinct()
+          .join(closure, Seq("src", "dst"), "left_anti")
+          .localCheckpoint(true)
+        if (next.isEmpty) done = true
+        else {
+          closure = closure.unionAll(next).localCheckpoint(true)
+          delta = next
+        }
       }
+      closure
     }
-    closure
   }
 
   /**
@@ -759,36 +747,35 @@ object Graphs {
    */
   def coreness(edgesIn: DataFrame,
                smallGraphThreshold: Long = SmallGraphThreshold): DataFrame = {
-    val e0 = undirected(edgesIn)
-    if (e0.count() <= smallGraphThreshold)
-      return driverCoreness(edgesIn.sparkSession,
-        e0.collect().map(r => (r.getLong(0), r.getLong(1))))
-    var g = e0.localCheckpoint(true)
-    var alive = g.select(col("a").as("id")).unionAll(g.select(col("b").as("id")))
-      .distinct().localCheckpoint(true)
-    var out: DataFrame = null
-    var k = 1L
-    while (!alive.isEmpty) {
-      // current degree of every alive node (0 once its last edge died)
-      val deg = g.select(col("a").as("id")).unionAll(g.select(col("b").as("id")))
-        .groupBy(col("id")).agg(count(lit(1)).as("d"))
-      val doomed = alive.join(deg, Seq("id"), "left")
-        .filter(coalesce(col("d"), lit(0L)) <= k)
-        .select(col("id")).localCheckpoint(true)
-      if (doomed.isEmpty) { k += 1 }
-      else {
-        val assigned = doomed.withColumn("coreness", lit(k))
-        out = if (out == null) assigned.localCheckpoint(true)
-              else out.unionAll(assigned).localCheckpoint(true)
-        alive = alive.join(doomed, Seq("id"), "left_anti").localCheckpoint(true)
-        g = g.join(doomed.withColumnRenamed("id", "a"), Seq("a"), "left_anti")
-          .join(doomed.withColumnRenamed("id", "b"), Seq("b"), "left_anti")
-          .select(col("a"), col("b")).localCheckpoint(true)
+    Adaptive.small(undirected(edgesIn), smallGraphThreshold)(rows =>
+      driverCoreness(edgesIn.sparkSession, Adaptive.pairs(rows))) { g0 =>
+      var g = g0
+      var alive = g.select(col("a").as("id")).unionAll(g.select(col("b").as("id")))
+        .distinct().localCheckpoint(true)
+      var out: DataFrame = null
+      var k = 1L
+      while (!alive.isEmpty) {
+        // current degree of every alive node (0 once its last edge died)
+        val deg = g.select(col("a").as("id")).unionAll(g.select(col("b").as("id")))
+          .groupBy(col("id")).agg(count(lit(1)).as("d"))
+        val doomed = alive.join(deg, Seq("id"), "left")
+          .filter(coalesce(col("d"), lit(0L)) <= k)
+          .select(col("id")).localCheckpoint(true)
+        if (doomed.isEmpty) { k += 1 }
+        else {
+          val assigned = doomed.withColumn("coreness", lit(k))
+          out = if (out == null) assigned.localCheckpoint(true)
+                else out.unionAll(assigned).localCheckpoint(true)
+          alive = alive.join(doomed, Seq("id"), "left_anti").localCheckpoint(true)
+          g = g.join(doomed.withColumnRenamed("id", "a"), Seq("a"), "left_anti")
+            .join(doomed.withColumnRenamed("id", "b"), Seq("b"), "left_anti")
+            .select(col("a"), col("b")).localCheckpoint(true)
+        }
       }
+      if (out == null) g0.sparkSession.emptyDataFrame
+        .withColumn("id", lit(0L)).withColumn("coreness", lit(0L)).limit(0)
+      else out
     }
-    if (out == null) e0.sparkSession.emptyDataFrame
-      .withColumn("id", lit(0L)).withColumn("coreness", lit(0L)).limit(0)
-    else out
   }
 
   /** Sequential hop-bounded Bellman–Ford — the driver fallback twin of
@@ -853,37 +840,38 @@ object Graphs {
       .select(col("src").cast("long"), col("dst").cast("long"), col("w").cast("long"))
       .filter(col("src") =!= col("dst"))
       .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w"))
-    val sized = edges.agg(count(lit(1)).as("n"),
-      coalesce(min(col("w")), lit(0L)).as("minw")).head()
-    require(sized.getLong(1) >= 0L,
-      s"sssp requires non-negative weights; min weight seen = ${sized.getLong(1)}")
+    def requireNonNegative(minW: Long): Unit = require(minW >= 0L,
+      s"sssp requires non-negative weights; min weight seen = $minW")
     val seedIds = seeds.select(col("id").cast("long")).distinct()
-    if (sized.getLong(0) <= smallGraphThreshold)
-      return driverSssp(edgesIn.sparkSession,
-        edges.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))),
-        seedIds.collect().map(_.getLong(0)), maxHops)
-    val e = edges.repartition(col("src")).localCheckpoint(true)
-    var dist = seedIds.withColumn("dist", lit(0L)).localCheckpoint(true)
-    var frontier = dist
-    var h = 0
-    var done = false
-    while (h < maxHops && !done) {
-      h += 1
-      val cand = frontier.withColumnRenamed("id", "src")
-        .join(e, Seq("src"))
-        .select(col("dst").as("id"), (col("dist") + col("w")).as("cand"))
-        .groupBy(col("id")).agg(min(col("cand")).as("cand"))
-      val improved = cand.join(dist, Seq("id"), "left")
-        .filter(col("dist").isNull || col("cand") < col("dist"))
-        .select(col("id"), col("cand").as("dist")).localCheckpoint(true)
-      if (improved.isEmpty) done = true
-      else {
-        dist = dist.join(improved.select(col("id")), Seq("id"), "left_anti")
-          .unionAll(improved).localCheckpoint(true)
-        frontier = improved
+    Adaptive.small(edges, smallGraphThreshold) { rows =>
+      val es = rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      requireNonNegative(es.foldLeft(0L)((m, e) => math.min(m, e._3)))
+      driverSssp(edgesIn.sparkSession, es, seedIds.collect().map(_.getLong(0)), maxHops)
+    } { edges =>
+      requireNonNegative(edges.agg(coalesce(min(col("w")), lit(0L))).head().getLong(0))
+      val e = edges.repartition(col("src")).localCheckpoint(true)
+      var dist = seedIds.withColumn("dist", lit(0L)).localCheckpoint(true)
+      var frontier = dist
+      var h = 0
+      var done = false
+      while (h < maxHops && !done) {
+        h += 1
+        val cand = frontier.withColumnRenamed("id", "src")
+          .join(e, Seq("src"))
+          .select(col("dst").as("id"), (col("dist") + col("w")).as("cand"))
+          .groupBy(col("id")).agg(min(col("cand")).as("cand"))
+        val improved = cand.join(dist, Seq("id"), "left")
+          .filter(col("dist").isNull || col("cand") < col("dist"))
+          .select(col("id"), col("cand").as("dist")).localCheckpoint(true)
+        if (improved.isEmpty) done = true
+        else {
+          dist = dist.join(improved.select(col("id")), Seq("id"), "left_anti")
+            .unionAll(improved).localCheckpoint(true)
+          frontier = improved
+        }
       }
+      dist
     }
-    dist
   }
 
   /**
@@ -905,33 +893,29 @@ object Graphs {
   def bfs(edgesIn: DataFrame, seeds: DataFrame, maxDepth: Int = 6,
           smallGraphThreshold: Long = SmallGraphThreshold): DataFrame = {
     require(maxDepth >= 0, "maxDepth must be >= 0")
-    val edges = edgesIn
-      .select(col("src").cast("long"), col("dst").cast("long"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
     val seedIds = seeds.select(col("id").cast("long")).distinct()
-    if (edges.count() <= smallGraphThreshold)
-      return driverBfs(edgesIn.sparkSession,
-        edges.collect().map(r => (r.getLong(0), r.getLong(1))),
-        seedIds.collect().map(_.getLong(0)), maxDepth)
-    val e = edges.repartition(col("src")).localCheckpoint(true)
-    var dist = seedIds.withColumn("dist", lit(0)).localCheckpoint(true)
-    var frontier = dist.select(col("id"))
-    var d = 0
-    var done = false
-    while (d < maxDepth && !done) {
-      d += 1
-      val next = e.join(frontier.withColumnRenamed("id", "src"), Seq("src"))
-        .select(col("dst").as("id")).distinct()
-        .join(dist.select(col("id")), Seq("id"), "left_anti")
-        .localCheckpoint(true)
-      if (next.isEmpty) done = true
-      else {
-        dist = dist.unionAll(next.withColumn("dist", lit(d))).localCheckpoint(true)
-        frontier = next
+    Adaptive.small(directed(edgesIn), smallGraphThreshold)(rows =>
+      driverBfs(edgesIn.sparkSession, Adaptive.pairs(rows),
+        seedIds.collect().map(_.getLong(0)), maxDepth)) { edges =>
+      val e = edges.repartition(col("src")).localCheckpoint(true)
+      var dist = seedIds.withColumn("dist", lit(0)).localCheckpoint(true)
+      var frontier = dist.select(col("id"))
+      var d = 0
+      var done = false
+      while (d < maxDepth && !done) {
+        d += 1
+        val next = e.join(frontier.withColumnRenamed("id", "src"), Seq("src"))
+          .select(col("dst").as("id")).distinct()
+          .join(dist.select(col("id")), Seq("id"), "left_anti")
+          .localCheckpoint(true)
+        if (next.isEmpty) done = true
+        else {
+          dist = dist.unionAll(next.withColumn("dist", lit(d))).localCheckpoint(true)
+          frontier = next
+        }
       }
+      dist
     }
-    dist
   }
 
   /**
@@ -986,57 +970,56 @@ object Graphs {
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"), col("w"))
       .groupBy(col("a"), col("b")).agg(min(col("w")).as("w"))
-      .localCheckpoint(true)
-    if (edges.count() <= smallGraphThreshold)
-      return driverKruskal(spark,
-        edges.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))))
-    import spark.implicits._
-    // node -> current component label (self to start)
-    var labels = edges.select(col("a").as("id"))
-      .unionAll(edges.select(col("b").as("id"))).distinct()
-      .select(col("id"), col("id").as("lbl")).localCheckpoint(true)
-    var remaining = edges
-    var forest = Seq.empty[(Long, Long, Long)].toDF("a", "b", "w")
-    var round = 0
-    var done = false
-    while (round < 64 && !done) {
-      round += 1
-      val el = remaining
-        .join(labels.select(col("id").as("a"), col("lbl").as("la")), Seq("a"))
-        .join(labels.select(col("id").as("b"), col("lbl").as("lb")), Seq("b"))
-        .filter(col("la") =!= col("lb"))
-        .localCheckpoint(true)
-      if (el.isEmpty) done = true
-      else {
-        // per-component cheapest outgoing edge under (w, a, b); la/lb ride
-        // the struct for the contraction step (determined by (a, b), so
-        // they never influence the min)
-        val sel = el.select(col("la").as("c"),
-            struct(col("w"), col("a"), col("b"), col("la"), col("lb")).as("e"))
-          .unionAll(el.select(col("lb").as("c"),
-            struct(col("w"), col("a"), col("b"), col("la"), col("lb")).as("e")))
-          .groupBy(col("c")).agg(min(col("e")).as("e"))
-          .select(col("e.a").as("a"), col("e.b").as("b"), col("e.w").as("w"),
-            col("e.la").as("la"), col("e.lb").as("lb"))
-          .distinct().localCheckpoint(true)
-        forest = forest.unionAll(sel.select(col("a"), col("b"), col("w")))
+    Adaptive.small(edges, smallGraphThreshold)(rows => driverKruskal(spark,
+      rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))))) { edges =>
+      import spark.implicits._
+      // node -> current component label (self to start)
+      var labels = edges.select(col("a").as("id"))
+        .unionAll(edges.select(col("b").as("id"))).distinct()
+        .select(col("id"), col("id").as("lbl")).localCheckpoint(true)
+      var remaining = edges
+      var forest = Seq.empty[(Long, Long, Long)].toDF("a", "b", "w")
+      var round = 0
+      var done = false
+      while (round < 64 && !done) {
+        round += 1
+        val el = remaining
+          .join(labels.select(col("id").as("a"), col("lbl").as("la")), Seq("a"))
+          .join(labels.select(col("id").as("b"), col("lbl").as("lb")), Seq("b"))
+          .filter(col("la") =!= col("lb"))
           .localCheckpoint(true)
-        val cc = graft.canon.ConnectedComponents.run(
-          sel.select(col("la").as("src"), col("lb").as("dst")))
-        labels = labels
-          .join(cc.withColumnRenamed("id", "lbl"), Seq("lbl"), "left")
-          .select(col("id"), coalesce(col("component"), col("lbl")).as("lbl"))
-          .localCheckpoint(true)
-        remaining = el.select(col("a"), col("b"), col("w")).localCheckpoint(true)
+        if (el.isEmpty) done = true
+        else {
+          // per-component cheapest outgoing edge under (w, a, b); la/lb ride
+          // the struct for the contraction step (determined by (a, b), so
+          // they never influence the min)
+          val sel = el.select(col("la").as("c"),
+              struct(col("w"), col("a"), col("b"), col("la"), col("lb")).as("e"))
+            .unionAll(el.select(col("lb").as("c"),
+              struct(col("w"), col("a"), col("b"), col("la"), col("lb")).as("e")))
+            .groupBy(col("c")).agg(min(col("e")).as("e"))
+            .select(col("e.a").as("a"), col("e.b").as("b"), col("e.w").as("w"),
+              col("e.la").as("la"), col("e.lb").as("lb"))
+            .distinct().localCheckpoint(true)
+          forest = forest.unionAll(sel.select(col("a"), col("b"), col("w")))
+            .localCheckpoint(true)
+          val cc = graft.canon.ConnectedComponents.run(
+            sel.select(col("la").as("src"), col("lb").as("dst")))
+          labels = labels
+            .join(cc.withColumnRenamed("id", "lbl"), Seq("lbl"), "left")
+            .select(col("id"), coalesce(col("component"), col("lbl")).as("lbl"))
+            .localCheckpoint(true)
+          remaining = el.select(col("a"), col("b"), col("w")).localCheckpoint(true)
+        }
       }
+      require(done, s"minSpanningForest did not converge in $round rounds — " +
+        "impossible for <= 2^63 nodes (components halve per round); input bug")
+      forest
     }
-    require(done, s"minSpanningForest did not converge in $round rounds — " +
-      "impossible for <= 2^63 nodes (components halve per round); input bug")
-    forest
   }
 
   /** Exact Kruskal under the (w, a, b) total order for an
-    * already-materialized small edge set (see `minSpanningForest`'s
+    * small edge set collected on the driver (see `minSpanningForest`'s
     * threshold): sort once, accept each edge iff its endpoints are in
     * different union-find trees — iterative find + union-by-size, the
     * [[graft.canon.ConnectedComponents]] driver discipline. */
@@ -1099,48 +1082,46 @@ object Graphs {
                   smallGraphThreshold: Long = SmallGraphThreshold): DataFrame = {
     require(walksPerNode >= 1, "walksPerNode must be >= 1")
     require(maxLen >= 0, "maxLen must be >= 0")
-    val e = edgesIn.select(col("src").cast("long"), col("dst").cast("long"))
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint(true)
     // adaptive driver fallback (the hits/BFS convention): maxLen
     // scheduled rounds of fixed latency vs one bounded 16 B/edge collect;
     // equality-tested vs the distributed loop at threshold 0 and vs the
     // sequential twin (GraphsSpec)
-    if (e.count() <= smallGraphThreshold)
-      return driverRandomWalks(edgesIn.sparkSession,
-        e.collect().map(r => (r.getLong(0), r.getLong(1))),
-        walksPerNode, maxLen, seed)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("src")).orderBy(col("dst"))
-    val adj = e.withColumn("rank", row_number().over(w).cast("long") - lit(1L))
-      .localCheckpoint(true)
-    val deg = adj.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
-    val starts = deg.select(col("src").as("start"),
-        explode(sequence(lit(0L), lit(walksPerNode - 1L))).as("walk"))
-      .localCheckpoint(true)
-    var out = starts.select(col("start"), col("walk"), lit(0L).as("step"),
-      col("start").as("node")).localCheckpoint(true)
-    var frontier = out
-    var t = 0L
-    while (t < maxLen && !frontier.isEmpty) {
-      t += 1
-      val next = frontier
-        .select(col("start"), col("walk"), col("node").as("src"))
-        .join(deg, Seq("src"))
-        .withColumn("rank", pmod(
-          xxhash64(col("start"), col("walk"), lit(t), col("src"), lit(seed)),
-          col("deg")))
-        .join(adj, Seq("src", "rank"))
-        .select(col("start"), col("walk"), lit(t).as("step"),
-          col("dst").as("node"))
+    Adaptive.small(directed(edgesIn), smallGraphThreshold)(rows =>
+      driverRandomWalks(edgesIn.sparkSession, Adaptive.pairs(rows),
+        walksPerNode, maxLen, seed)) { e =>
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("src")).orderBy(col("dst"))
+      val adj = e.withColumn("rank", row_number().over(w).cast("long") - lit(1L))
         .localCheckpoint(true)
-      // no checkpoint on the step union: every branch is already a
-      // checkpointed per-step frame, so the plan stays flat — the old
-      // per-step checkpoint rewrote the whole growing walk table each step
-      out = out.unionAll(next)
-      frontier = next
+      val deg = adj.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+        .localCheckpoint(true)
+      val starts = deg.select(col("src").as("start"),
+          explode(sequence(lit(0L), lit(walksPerNode - 1L))).as("walk"))
+        .localCheckpoint(true)
+      var out = starts.select(col("start"), col("walk"), lit(0L).as("step"),
+        col("start").as("node")).localCheckpoint(true)
+      var frontier = out
+      var t = 0L
+      while (t < maxLen && !frontier.isEmpty) {
+        t += 1
+        val next = frontier
+          .select(col("start"), col("walk"), col("node").as("src"))
+          .join(deg, Seq("src"))
+          .withColumn("rank", pmod(
+            xxhash64(col("start"), col("walk"), lit(t), col("src"), lit(seed)),
+            col("deg")))
+          .join(adj, Seq("src", "rank"))
+          .select(col("start"), col("walk"), lit(t).as("step"),
+            col("dst").as("node"))
+          .localCheckpoint(true)
+        // no checkpoint on the step union: every branch is already a
+        // checkpointed per-step frame, so the plan stays flat — the old
+        // per-step checkpoint rewrote the whole growing walk table each step
+        out = out.unionAll(next)
+        frontier = next
+      }
+      out
     }
-    out
   }
 
   /** Driver-side walk loop — the identical deterministic recurrence
@@ -1207,29 +1188,28 @@ object Graphs {
   def labelPropagation(edgesIn: DataFrame, iters: Int = 5,
                        smallGraphThreshold: Long = SmallGraphThreshold): DataFrame = {
     require(iters >= 0, "iters must be >= 0")
-    val e = undirected(edgesIn).localCheckpoint(true)
     // adaptive driver fallback (the hits/BFS convention): iters scheduled
     // join+agg rounds vs one bounded 16 B/edge collect; equality-tested
     // vs the distributed loop at threshold 0 (GraphsSpec)
-    if (e.count() <= smallGraphThreshold)
-      return driverLpa(edgesIn.sparkSession,
-        e.collect().map(r => (r.getLong(0), r.getLong(1))), iters)
-    val sym = e.select(col("a").as("node"), col("b").as("nbr"))
-      .unionAll(e.select(col("b").as("node"), col("a").as("nbr")))
-      .localCheckpoint(true)
-    var labels = sym.select(col("node").as("id")).distinct()
-      .withColumn("label", col("id")).localCheckpoint(true)
-    for (_ <- 1 to iters) {
-      labels = sym
-        .join(labels.withColumnRenamed("id", "nbr"), Seq("nbr"))
-        .groupBy(col("node"), col("label")).agg(count(lit(1)).as("cnt"))
-        .groupBy(col("node"))
-        .agg(max(struct(col("cnt"),
-          bitwise_not(col("label")).as("nlabel"))).as("m"))
-        .select(col("node").as("id"), bitwise_not(col("m.nlabel")).as("label"))
+    Adaptive.small(undirected(edgesIn), smallGraphThreshold)(rows =>
+      driverLpa(edgesIn.sparkSession, Adaptive.pairs(rows), iters)) { e =>
+      val sym = e.select(col("a").as("node"), col("b").as("nbr"))
+        .unionAll(e.select(col("b").as("node"), col("a").as("nbr")))
         .localCheckpoint(true)
+      var labels = sym.select(col("node").as("id")).distinct()
+        .withColumn("label", col("id")).localCheckpoint(true)
+      for (_ <- 1 to iters) {
+        labels = sym
+          .join(labels.withColumnRenamed("id", "nbr"), Seq("nbr"))
+          .groupBy(col("node"), col("label")).agg(count(lit(1)).as("cnt"))
+          .groupBy(col("node"))
+          .agg(max(struct(col("cnt"),
+            bitwise_not(col("label")).as("nlabel"))).as("m"))
+          .select(col("node").as("id"), bitwise_not(col("m.nlabel")).as("label"))
+          .localCheckpoint(true)
+      }
+      labels
     }
-    labels
   }
 
   /** Driver-side synchronous LPA loop — the identical deterministic
@@ -1589,17 +1569,19 @@ object Graphs {
     require(wBack >= 0 && wCommon >= 0 && wFar >= 0,
       "transition weights must be non-negative")
     require(wBack + wCommon + wFar > 0, "at least one weight must be positive")
-    val e0 = edgesIn.select(col("src").cast("long"), col("dst").cast("long"))
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint(true)
     // adaptive driver fallback (the randomWalks convention): per-step
     // window+join rounds of fixed latency vs one bounded collect;
     // equality-tested vs the distributed loop at threshold 0 and vs the
     // sequential twin (GraphsSpec)
-    if (e0.count() <= smallGraphThreshold)
-      return driverNode2vecWalks(edgesIn.sparkSession,
-        e0.collect().map(r => (r.getLong(0), r.getLong(1))),
-        walksPerNode, maxLen, wBack, wCommon, wFar, seed)
-    val e = e0
+    Adaptive.small(directed(edgesIn), smallGraphThreshold)(rows =>
+      driverNode2vecWalks(edgesIn.sparkSession, Adaptive.pairs(rows),
+        walksPerNode, maxLen, wBack, wCommon, wFar, seed))(
+      node2vecDistributed(_, walksPerNode, maxLen, wBack, wCommon, wFar, seed))
+  }
+
+  private def node2vecDistributed(e: DataFrame, walksPerNode: Int, maxLen: Int,
+                                  wBack: Long, wCommon: Long, wFar: Long,
+                                  seed: Long): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("src")).orderBy(col("dst"))
     val adj = e.withColumn("rank", row_number().over(w).cast("long") - lit(1L))
@@ -1818,46 +1800,44 @@ object Graphs {
            smallGraphThreshold: Long = SmallGraphThreshold): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
     require(bits >= 4 && bits <= 40, "bits must be in [4, 40]")
-    val e = edgesIn.select(col("src").cast("long"), col("dst").cast("long"))
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint(true)
     // adaptive driver fallback (the PageRank/BFS convention): 2·iters
     // scheduled half-rounds of fixed latency dwarf the actual work on a
     // sub-threshold graph; equality-tested vs the distributed loop at
     // threshold 0 (GraphsSpec)
-    if (e.count() <= smallGraphThreshold)
-      return driverHits(edgesIn.sparkSession,
-        e.collect().map(r => (r.getLong(0), r.getLong(1))), iters, bits)
-    val nodes = e.select(col("src").as("id"))
-      .unionAll(e.select(col("dst").as("id"))).distinct()
-      .localCheckpoint(true)
-    // materialize the half-round ONCE, then take the max off the
-    // checkpoint and shift as a lazy projection — the earlier shape
-    // (eager max on the unmaterialized sum, then checkpoint of the
-    // shifted frame) computed every join+sum twice per half-round
-    def rescale(scored: DataFrame, c: String): DataFrame = {
-      val m = scored.localCheckpoint(true)
-      val mxRow = m.agg(max(col(c))).head()
-      val mx = if (mxRow.isNullAt(0)) 0L else mxRow.getLong(0)
-      val shift = math.max(0, 64 - java.lang.Long.numberOfLeadingZeros(mx) - bits)
-      m.select(col("id"), shiftright(col(c), shift).as(c))
+    Adaptive.small(directed(edgesIn), smallGraphThreshold)(rows =>
+      driverHits(edgesIn.sparkSession, Adaptive.pairs(rows), iters, bits)) { e =>
+      val nodes = e.select(col("src").as("id"))
+        .unionAll(e.select(col("dst").as("id"))).distinct()
+        .localCheckpoint(true)
+      // materialize the half-round ONCE, then take the max off the
+      // checkpoint and shift as a lazy projection — the earlier shape
+      // (eager max on the unmaterialized sum, then checkpoint of the
+      // shifted frame) computed every join+sum twice per half-round
+      def rescale(scored: DataFrame, c: String): DataFrame = {
+        val m = scored.localCheckpoint(true)
+        val mxRow = m.agg(max(col(c))).head()
+        val mx = if (mxRow.isNullAt(0)) 0L else mxRow.getLong(0)
+        val shift = math.max(0, 64 - java.lang.Long.numberOfLeadingZeros(mx) - bits)
+        m.select(col("id"), shiftright(col(c), shift).as(c))
+      }
+      var hub = nodes.withColumn("h", lit(1L << (bits - 1)))
+        .localCheckpoint(true)
+      var auth: DataFrame = null
+      for (_ <- 1 to iters) {
+        val aSum = e.join(hub.select(col("id").as("src"), col("h")), Seq("src"))
+          .groupBy(col("dst").as("id")).agg(sum(col("h")).as("a"))
+        auth = rescale(
+          nodes.join(aSum, Seq("id"), "left")
+            .select(col("id"), coalesce(col("a"), lit(0L)).as("a")), "a")
+        val hSum = e.join(auth.select(col("id").as("dst"), col("a")), Seq("dst"))
+          .groupBy(col("src").as("id")).agg(sum(col("a")).as("h"))
+        hub = rescale(
+          nodes.join(hSum, Seq("id"), "left")
+            .select(col("id"), coalesce(col("h"), lit(0L)).as("h")), "h")
+      }
+      hub.join(auth, Seq("id"))
+        .select(col("id"), col("h").as("hub"), col("a").as("authority"))
     }
-    var hub = nodes.withColumn("h", lit(1L << (bits - 1)))
-      .localCheckpoint(true)
-    var auth: DataFrame = null
-    for (_ <- 1 to iters) {
-      val aSum = e.join(hub.select(col("id").as("src"), col("h")), Seq("src"))
-        .groupBy(col("dst").as("id")).agg(sum(col("h")).as("a"))
-      auth = rescale(
-        nodes.join(aSum, Seq("id"), "left")
-          .select(col("id"), coalesce(col("a"), lit(0L)).as("a")), "a")
-      val hSum = e.join(auth.select(col("id").as("dst"), col("a")), Seq("dst"))
-        .groupBy(col("src").as("id")).agg(sum(col("a")).as("h"))
-      hub = rescale(
-        nodes.join(hSum, Seq("id"), "left")
-          .select(col("id"), coalesce(col("h"), lit(0L)).as("h")), "h")
-    }
-    hub.join(auth, Seq("id"))
-      .select(col("id"), col("h").as("hub"), col("a").as("authority"))
   }
 
   /** Driver-side HITS loop — the identical all-integer recurrence
@@ -2390,10 +2370,6 @@ object Graphs {
   def scc(edgesIn: DataFrame,
           smallGraphThreshold: Long = SmallGraphThreshold): DataFrame = {
     val spark = edgesIn.sparkSession
-    val edges0 = edgesIn
-      .select(col("src").cast("long"), col("dst").cast("long"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
     val selfLoopOnly = edgesIn
       .select(col("src").cast("long"), col("dst").cast("long"))
       .filter(col("src") === col("dst"))
@@ -2403,9 +2379,12 @@ object Graphs {
     def withSelfLoopOnly(core: DataFrame): DataFrame = core.unionByName(
       selfLoopOnly.join(core, Seq("id"), "left_anti")
         .select(col("id"), col("id").as("scc")))
-    if (edges0.count() <= smallGraphThreshold)
-      return withSelfLoopOnly(driverScc(spark,
-        edges0.collect().map(r => (r.getLong(0), r.getLong(1)))))
+    withSelfLoopOnly(Adaptive.small(directed(edgesIn), smallGraphThreshold)(rows =>
+      driverScc(spark, Adaptive.pairs(rows)))(sccDistributed))
+  }
+
+  private def sccDistributed(edges0: DataFrame): DataFrame = {
+    val spark = edges0.sparkSession
     var edges = edges0.repartition(col("src")).localCheckpoint(true)
     var nodes = edges.select(col("src").as("id"))
       .unionAll(edges.select(col("dst").as("id"))).distinct()
@@ -2434,7 +2413,7 @@ object Graphs {
             .localCheckpoint(true)
         }
       }
-      if (nodes.isEmpty) return withSelfLoopOnly(assigned)
+      if (nodes.isEmpty) return assigned
       // 2. COLOR: forward min-label fixpoint over the active subgraph
       var colors = nodes.select(col("id"), col("id").as("color"))
         .localCheckpoint(true)
@@ -2483,7 +2462,7 @@ object Graphs {
         .join(marked.select(col("id").as("dst")), Seq("dst"), "left_anti")
         .localCheckpoint(true)
     }
-    withSelfLoopOnly(assigned)
+    assigned
   }
 
   /** Node priority table for the symmetry-breaking rounds of
@@ -2601,54 +2580,50 @@ object Graphs {
     // dominates on small graphs — below the threshold run the SAME
     // Jones-Plassmann recurrence sequentially (equality-tested at
     // threshold 0 in GraphsSpec)
-    if (e.limit(math.min(smallGraphThreshold + 1, Int.MaxValue.toLong).toInt)
-          .count() <= smallGraphThreshold) {
+    Adaptive.small(e, smallGraphThreshold)(rows =>
+      driverColoring(edgesIn.sparkSession, Adaptive.pairs(rows), seed)) { e =>
+      val sym = e.select(col("a").as("node"), col("b").as("nbr"))
+        .unionAll(e.select(col("b").as("node"), col("a").as("nbr")))
+        .localCheckpoint(true)
+      var uncolored = sym.select(col("node").as("id")).distinct()
+        .localCheckpoint(true)
       val spark = edgesIn.sparkSession
       import spark.implicits._
-      return driverColoring(spark,
-        e.select(col("a"), col("b")).as[(Long, Long)].collect(), seed)
-    }
-    val sym = e.select(col("a").as("node"), col("b").as("nbr"))
-      .unionAll(e.select(col("b").as("node"), col("a").as("nbr")))
-      .localCheckpoint(true)
-    var uncolored = sym.select(col("node").as("id")).distinct()
-      .localCheckpoint(true)
-    val spark = edgesIn.sparkSession
-    import spark.implicits._
-    var colors = Seq.empty[(Long, Long)].toDF("id", "color")
-      .localCheckpoint(true)
-    var round = 0
-    while (!uncolored.isEmpty) {
-      round += 1
-      require(round <= 256, "greedyColoring did not converge in 256 " +
-        "rounds — expected O(log n) for hash priorities; input bug")
-      val prio = hashPriorities(uncolored, seed).localCheckpoint(true)
-      // local minima among UNCOLORED neighbors only
-      val nbrMin = sym
-        .join(prio.select(col("id").as("node"), col("prio")), Seq("node"))
-        .join(prio.select(col("id").as("nbr"), col("prio").as("np")),
-          Seq("nbr"))
-        .groupBy(col("node").as("id")).agg(min(col("np")).as("nmin"))
-      val ready = prio.join(nbrMin, Seq("id"), "left")
-        .filter(col("nmin").isNull || col("prio") < col("nmin"))
-        .select(col("id")).localCheckpoint(true)
-      // smallest color not used by any COLORED neighbor
-      val used = sym
-        .join(ready.withColumnRenamed("id", "node"), Seq("node"))
-        .join(colors.withColumnRenamed("id", "nbr"), Seq("nbr"))
-        .groupBy(col("node").as("id"))
-        .agg(sort_array(collect_set(col("color"))).as("used"))
-      val assigned = ready.join(used, Seq("id"), "left")
-        .withColumn("used", coalesce(col("used"),
-          array().cast("array<long>")))
-        .select(col("id"), array_min(filter(
-            sequence(lit(0L), size(col("used")).cast("long")),
-            c => !array_contains(col("used"), c))).as("color"))
-      colors = colors.unionAll(assigned).localCheckpoint(true)
-      uncolored = uncolored.join(ready, Seq("id"), "left_anti")
+      var colors = Seq.empty[(Long, Long)].toDF("id", "color")
         .localCheckpoint(true)
+      var round = 0
+      while (!uncolored.isEmpty) {
+        round += 1
+        require(round <= 256, "greedyColoring did not converge in 256 " +
+          "rounds — expected O(log n) for hash priorities; input bug")
+        val prio = hashPriorities(uncolored, seed).localCheckpoint(true)
+        // local minima among UNCOLORED neighbors only
+        val nbrMin = sym
+          .join(prio.select(col("id").as("node"), col("prio")), Seq("node"))
+          .join(prio.select(col("id").as("nbr"), col("prio").as("np")),
+            Seq("nbr"))
+          .groupBy(col("node").as("id")).agg(min(col("np")).as("nmin"))
+        val ready = prio.join(nbrMin, Seq("id"), "left")
+          .filter(col("nmin").isNull || col("prio") < col("nmin"))
+          .select(col("id")).localCheckpoint(true)
+        // smallest color not used by any COLORED neighbor
+        val used = sym
+          .join(ready.withColumnRenamed("id", "node"), Seq("node"))
+          .join(colors.withColumnRenamed("id", "nbr"), Seq("nbr"))
+          .groupBy(col("node").as("id"))
+          .agg(sort_array(collect_set(col("color"))).as("used"))
+        val assigned = ready.join(used, Seq("id"), "left")
+          .withColumn("used", coalesce(col("used"),
+            array().cast("array<long>")))
+          .select(col("id"), array_min(filter(
+              sequence(lit(0L), size(col("used")).cast("long")),
+              c => !array_contains(col("used"), c))).as("color"))
+        colors = colors.unionAll(assigned).localCheckpoint(true)
+        uncolored = uncolored.join(ready, Seq("id"), "left_anti")
+          .localCheckpoint(true)
+      }
+      colors
     }
-    colors
   }
 
   /** The sequential Jones–Plassmann twin of [[greedyColoring]]'s
@@ -2814,39 +2789,38 @@ object Graphs {
                       smallGraphThreshold: Long = SmallGraphThreshold): DataFrame = {
     require(epsNum >= 0 && epsDen >= 1,
       s"eps must be a non-negative rational, got $epsNum/$epsDen")
-    val e0 = undirected(edgesIn)
-    if (e0.count() <= smallGraphThreshold)
-      return driverDensest(edgesIn.sparkSession,
-        e0.collect().map(r => (r.getLong(0), r.getLong(1))), epsNum, epsDen)
-    val dec = "decimal(38,0)"
-    var g = e0.localCheckpoint(true)
-    var nodes = g.select(col("a").as("id")).unionAll(g.select(col("b").as("id")))
-      .distinct().localCheckpoint(true)
-    var eCnt = g.count(); var vCnt = nodes.count()
-    var best = nodes; var bestE = eCnt; var bestV = vCnt
-    while (vCnt > 0) {
-      if (BigInt(eCnt) * BigInt(bestV) > BigInt(bestE) * BigInt(vCnt)) {
-        best = nodes; bestE = eCnt; bestV = vCnt
+    Adaptive.small(undirected(edgesIn), smallGraphThreshold)(rows =>
+      driverDensest(edgesIn.sparkSession, Adaptive.pairs(rows), epsNum, epsDen)) { g0 =>
+      val dec = "decimal(38,0)"
+      var g = g0
+      var nodes = g.select(col("a").as("id")).unionAll(g.select(col("b").as("id")))
+        .distinct().localCheckpoint(true)
+      var eCnt = g.count(); var vCnt = nodes.count()
+      var best = nodes; var bestE = eCnt; var bestV = vCnt
+      while (vCnt > 0) {
+        if (BigInt(eCnt) * BigInt(bestV) > BigInt(bestE) * BigInt(vCnt)) {
+          best = nodes; bestE = eCnt; bestV = vCnt
+        }
+        val deg = g.select(col("a").as("id")).unionAll(g.select(col("b").as("id")))
+          .groupBy(col("id")).agg(count(lit(1)).as("d"))
+        // deg * |V| * epsDen <= 2 * |E| * (epsDen + epsNum), both sides
+        // exact: the row side multiplies in decimal(38,0), the constant
+        // side is one BigInt rendered as a literal
+        val rhs = lit((BigInt(2) * eCnt * (epsDen + epsNum)).toString).cast(dec)
+        val lhsScale = lit((BigInt(vCnt) * epsDen).toString).cast(dec)
+        val doomed = nodes.join(deg, Seq("id"), "left")
+          .filter(coalesce(col("d"), lit(0L)).cast(dec) * lhsScale <= rhs)
+          .select(col("id")).localCheckpoint(true)
+        require(!doomed.isEmpty, "batch peel removed nothing — impossible: " +
+          "the minimum degree never exceeds (1+eps) * average degree")
+        nodes = nodes.join(doomed, Seq("id"), "left_anti").localCheckpoint(true)
+        g = g.join(doomed.withColumnRenamed("id", "a"), Seq("a"), "left_anti")
+          .join(doomed.withColumnRenamed("id", "b"), Seq("b"), "left_anti")
+          .select(col("a"), col("b")).localCheckpoint(true)
+        vCnt = nodes.count(); eCnt = g.count()
       }
-      val deg = g.select(col("a").as("id")).unionAll(g.select(col("b").as("id")))
-        .groupBy(col("id")).agg(count(lit(1)).as("d"))
-      // deg * |V| * epsDen <= 2 * |E| * (epsDen + epsNum), both sides
-      // exact: the row side multiplies in decimal(38,0), the constant
-      // side is one BigInt rendered as a literal
-      val rhs = lit((BigInt(2) * eCnt * (epsDen + epsNum)).toString).cast(dec)
-      val lhsScale = lit((BigInt(vCnt) * epsDen).toString).cast(dec)
-      val doomed = nodes.join(deg, Seq("id"), "left")
-        .filter(coalesce(col("d"), lit(0L)).cast(dec) * lhsScale <= rhs)
-        .select(col("id")).localCheckpoint(true)
-      require(!doomed.isEmpty, "batch peel removed nothing — impossible: " +
-        "the minimum degree never exceeds (1+eps) * average degree")
-      nodes = nodes.join(doomed, Seq("id"), "left_anti").localCheckpoint(true)
-      g = g.join(doomed.withColumnRenamed("id", "a"), Seq("a"), "left_anti")
-        .join(doomed.withColumnRenamed("id", "b"), Seq("b"), "left_anti")
-        .select(col("a"), col("b")).localCheckpoint(true)
-      vCnt = nodes.count(); eCnt = g.count()
+      best.select(col("id"), lit(bestV).as("v_cnt"), lit(bestE).as("e_cnt"))
     }
-    best.select(col("id"), lit(bestV).as("v_cnt"), lit(bestE).as("e_cnt"))
   }
 
   /**
@@ -3133,45 +3107,46 @@ object Graphs {
         "no topological layering exists (condense SCCs first)")
     val edges = edgesIn
       .select(col("src").cast("long"), col("dst").cast("long"))
-      .distinct().localCheckpoint(true)
-    val nodes = nodesIn.select(col("id").cast("long")).distinct()
-      .unionByName(edges.select(col("src").as("id")))
-      .unionByName(edges.select(col("dst").as("id")))
-      .distinct().localCheckpoint(true)
-    if (edges.count() <= smallGraphThreshold)
-      return driverTopoLayers(spark,
-        edges.collect().map(r => (r.getLong(0), r.getLong(1))),
-        nodes.collect().map(_.getLong(0)))
-    val e = edges.repartition(col("src")).localCheckpoint(true)
-    val indeg0 = e.groupBy(col("dst").as("id")).agg(count(lit(1)).as("indeg"))
-    var pending = nodes.join(indeg0, Seq("id"), "left")
-      .select(col("id"), coalesce(col("indeg"), lit(0L)).as("indeg"))
-      .localCheckpoint(true)
-    import spark.implicits._
-    var acc = Seq.empty[(Long, Int)].toDF("id", "layer")
-    var layer = 0
-    var frontier = pending.filter(col("indeg") === 0L).select(col("id"))
-      .localCheckpoint(true)
-    while (!frontier.isEmpty) {
-      acc = acc.unionByName(
-        frontier.select(col("id"), lit(layer).as("layer")))
+      .distinct()
+    val ids = nodesIn.select(col("id").cast("long")).distinct()
+    Adaptive.small(edges, smallGraphThreshold) { rows =>
+      val es = Adaptive.pairs(rows)
+      driverTopoLayers(spark, es,
+        (ids.collect().map(_.getLong(0)) ++ es.flatMap(e => Array(e._1, e._2))).distinct)
+    } { edges =>
+      val nodes = ids.unionByName(edges.select(col("src").as("id")))
+        .unionByName(edges.select(col("dst").as("id"))).distinct()
+      val e = edges.repartition(col("src")).localCheckpoint(true)
+      val indeg0 = e.groupBy(col("dst").as("id")).agg(count(lit(1)).as("indeg"))
+      var pending = nodes.join(indeg0, Seq("id"), "left")
+        .select(col("id"), coalesce(col("indeg"), lit(0L)).as("indeg"))
         .localCheckpoint(true)
-      val dec = e.join(frontier.withColumnRenamed("id", "src"), Seq("src"))
-        .groupBy(col("dst").as("id")).agg(count(lit(1)).as("d"))
-      pending = pending.join(frontier.select(col("id")), Seq("id"), "left_anti")
-        .join(dec, Seq("id"), "left")
-        .select(col("id"),
-          (col("indeg") - coalesce(col("d"), lit(0L))).as("indeg"))
+      import spark.implicits._
+      var acc = Seq.empty[(Long, Int)].toDF("id", "layer")
+      var layer = 0
+      var frontier = pending.filter(col("indeg") === 0L).select(col("id"))
         .localCheckpoint(true)
-      frontier = pending.filter(col("indeg") === 0L).select(col("id"))
-        .localCheckpoint(true)
-      layer += 1
+      while (!frontier.isEmpty) {
+        acc = acc.unionByName(
+          frontier.select(col("id"), lit(layer).as("layer")))
+          .localCheckpoint(true)
+        val dec = e.join(frontier.withColumnRenamed("id", "src"), Seq("src"))
+          .groupBy(col("dst").as("id")).agg(count(lit(1)).as("d"))
+        pending = pending.join(frontier.select(col("id")), Seq("id"), "left_anti")
+          .join(dec, Seq("id"), "left")
+          .select(col("id"),
+            (col("indeg") - coalesce(col("d"), lit(0L))).as("indeg"))
+          .localCheckpoint(true)
+        frontier = pending.filter(col("indeg") === 0L).select(col("id"))
+          .localCheckpoint(true)
+        layer += 1
+      }
+      val stuck = pending.count()
+      require(stuck == 0L,
+        s"topoLayers: graph has a cycle — $stuck nodes form or depend on a " +
+          "cycle (no topological layering exists); condense SCCs first " +
+          "(scc + quotientGraph)")
+      acc
     }
-    val stuck = pending.count()
-    require(stuck == 0L,
-      s"topoLayers: graph has a cycle — $stuck nodes form or depend on a " +
-        "cycle (no topological layering exists); condense SCCs first " +
-        "(scc + quotientGraph)")
-    acc
   }
 }

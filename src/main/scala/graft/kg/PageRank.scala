@@ -2,6 +2,7 @@ package graft.kg
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Adaptive
 
 /**
  * Entity importance over the materialized knowledge graph: static PageRank
@@ -48,16 +49,9 @@ object PageRank {
 
   val DefaultScale = 1000000000L // 1e9 fixed-point units per 1.0 of rank
 
-  /** ADAPTIVE small-graph fallback (the [[graft.canon.ConnectedComponents]]
-    * pattern): below this many (self-loop-free) input edges the whole rank
-    * recurrence runs on the driver — 2 Spark jobs (count + bounded collect)
-    * instead of ~3 per iteration. The distributed loop is the scale path
-    * and stays equality-tested against the driver loop (PageRankSpec).
-    * Sized like [[graft.kg.Graphs.SmallGraphThreshold]]: ≤ 16 B/edge
-    * collected (16 MB at the bound) vs ~3 fixed-latency jobs per
-    * iteration — round latency dominates real work on sub-10^6-edge
-    * graphs, and larger graphs still take the distributed path. */
-  val SmallGraphThreshold = 1000000L
+  /** Default edge bound of the driver fallback; see
+    * [[graft.core.Adaptive.SmallGraphThreshold]]. */
+  val SmallGraphThreshold: Long = Adaptive.SmallGraphThreshold
 
   /** Driver-side loop: the identical integer recurrence (equality-tested
     * against the distributed path, which protects both from drift). */
@@ -138,13 +132,9 @@ object PageRank {
           scale: Long = DefaultScale,
           smallGraphThreshold: Long = SmallGraphThreshold): DataFrame = {
     require(iterations >= 0, "iterations must be >= 0")
-    val raw = normalized(edgesIn)
-    if (raw.count() <= smallGraphThreshold)
-      driverPr(edgesIn.sparkSession,
-        raw.collect().map(r => (r.getLong(0), r.getLong(1))),
-        iterations, scale, None)
-    else {
-      val (nodes, adj) = prepare(edgesIn)
+    Adaptive.small(normalized(edgesIn), smallGraphThreshold)(rows =>
+      driverPr(edgesIn.sparkSession, Adaptive.pairs(rows), iterations, scale, None)) { raw =>
+      val (nodes, adj) = prepare(raw)
       iterate(
         nodes.select(col("id"), lit(15L * scale / 100L).as("base"), lit(scale).as("init")),
         adj, iterations)
@@ -186,29 +176,21 @@ object PageRank {
         col("w").cast("long"))
       .filter(col("src") =!= col("dst") && col("w") > 0)
       .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
-      .localCheckpoint(true)
     // LOUD overflow guard (the scaladoc bound, enforced like
-    // harmonicDenominator's): any node's rank is bounded by the total
-    // initial mass N*scale (the recurrence never creates mass), so the
-    // contribution product rank*85*w stays inside Long iff
-    // N*scale*85*maxW < 2^63. Checked in BigInt; one tiny extra agg +
-    // distinct-count over the (already checkpointed) edge table.
-    locally {
-      val mwRow = raw.agg(max(col("w"))).head()
-      if (!mwRow.isNullAt(0)) {
-        val maxW = mwRow.getLong(0)
-        val n = raw.select(col("src").as("id"))
-          .union(raw.select(col("dst").as("id"))).distinct().count()
-        require(BigInt(n) * scale * 85 * maxW < BigInt(Long.MaxValue),
-          s"runWeighted overflow: n=$n nodes * scale=$scale * 85 * maxW=$maxW " +
-            "exceeds Long range — drop `scale` a decade per decade of weight mass")
-      }
-    }
-    if (raw.count() <= smallGraphThreshold) {
+    // harmonicDenominator's), checked on whichever path runs: any node's
+    // rank is bounded by the total initial mass N*scale (the recurrence
+    // never creates mass), so the contribution product rank*85*w stays
+    // inside Long iff N*scale*85*maxW < 2^63. Checked in BigInt.
+    def requireInRange(n: Long, maxW: Long): Unit =
+      require(BigInt(n) * scale * 85 * maxW < BigInt(Long.MaxValue),
+        s"runWeighted overflow: n=$n nodes * scale=$scale * 85 * maxW=$maxW " +
+          "exceeds Long range — drop `scale` a decade per decade of weight mass")
+    Adaptive.small(raw, smallGraphThreshold) { rows =>
       val spark = edgesW.sparkSession
       import spark.implicits._
-      val edges = raw.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      val edges = rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
+      if (edges.nonEmpty) requireInRange(nodes.length, edges.map(_._3).max)
       val wout = edges.groupBy(_._1).map { case (s, es) => s -> es.map(_._3).sum }
       var ranks = nodes.map(v => v -> scale).toMap
       val base = 15L * scale / 100L
@@ -222,10 +204,12 @@ object PageRank {
         i += 1
       }
       nodes.toSeq.map(v => (v, ranks(v))).toDF("id", "rank")
-    } else {
+    } { raw =>
       val nodes = raw.select(col("src").as("id"))
         .union(raw.select(col("dst").as("id"))).distinct()
         .localCheckpoint(true)
+      val mwRow = raw.agg(max(col("w"))).head()
+      if (!mwRow.isNullAt(0)) requireInRange(nodes.count(), mwRow.getLong(0))
       val wout = raw.groupBy(col("src")).agg(sum(col("w")).as("wout"))
       val adj = raw.join(wout, Seq("src"))
         .repartition(col("src")).localCheckpoint(true)
@@ -265,16 +249,13 @@ object PageRank {
                       scale: Long = DefaultScale,
                       smallGraphThreshold: Long = SmallGraphThreshold): DataFrame = {
     require(iterations >= 0, "iterations must be >= 0")
-    val raw = normalized(edgesIn)
-    if (raw.count() <= smallGraphThreshold) {
+    Adaptive.small(normalized(edgesIn), smallGraphThreshold) { rows =>
       // the seed table is small by contract (broadcast on the scale path)
       val seedSet = seeds.select(col("id").cast("long")).distinct()
         .collect().map(_.getLong(0)).toSet
-      driverPr(edgesIn.sparkSession,
-        raw.collect().map(r => (r.getLong(0), r.getLong(1))),
-        iterations, scale, Some(seedSet))
-    } else {
-      val (nodes, adj) = prepare(edgesIn)
+      driverPr(edgesIn.sparkSession, Adaptive.pairs(rows), iterations, scale, Some(seedSet))
+    } { raw =>
+      val (nodes, adj) = prepare(raw)
       val seedIds = seeds.select(col("id").cast("long")).distinct()
         .withColumn("is_seed", lit(true))
       val marked = nodes.join(broadcast(seedIds), Seq("id"), "left")

@@ -392,32 +392,33 @@ object Temporal {
       // parallel same-ts duplicates collapse; distinct timestamps all kept
       .distinct()
     val seedIds = seeds.select(col("id").cast("long")).distinct()
-    if (edges.count() <= smallGraphThreshold)
-      return driverEarliestReach(edgesIn.sparkSession,
-        edges.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))),
-        seedIds.collect().map(_.getLong(0)), startTs, maxHops)
-    val e = edges.repartition(col("src")).localCheckpoint(true)
-    var arr = seedIds.withColumn("arrival", lit(startTs)).localCheckpoint(true)
-    var frontier = arr
-    var h = 0
-    var done = false
-    while (h < maxHops && !done) {
-      h += 1
-      val cand = frontier.withColumnRenamed("id", "src")
-        .join(e, Seq("src"))
-        .filter(col("ts") >= col("arrival"))
-        .select(col("dst").as("id"), col("ts").as("cand"))
-        .groupBy(col("id")).agg(min(col("cand")).as("cand"))
-      val improved = cand.join(arr, Seq("id"), "left")
-        .filter(col("arrival").isNull || col("cand") < col("arrival"))
-        .select(col("id"), col("cand").as("arrival")).localCheckpoint(true)
-      if (improved.isEmpty) done = true
-      else {
-        arr = arr.join(improved.select(col("id")), Seq("id"), "left_anti")
-          .unionAll(improved).localCheckpoint(true)
-        frontier = improved
+    graft.core.Adaptive.small(edges, smallGraphThreshold)(rows =>
+      driverEarliestReach(edgesIn.sparkSession,
+        rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))),
+        seedIds.collect().map(_.getLong(0)), startTs, maxHops)) { edges =>
+      val e = edges.repartition(col("src")).localCheckpoint(true)
+      var arr = seedIds.withColumn("arrival", lit(startTs)).localCheckpoint(true)
+      var frontier = arr
+      var h = 0
+      var done = false
+      while (h < maxHops && !done) {
+        h += 1
+        val cand = frontier.withColumnRenamed("id", "src")
+          .join(e, Seq("src"))
+          .filter(col("ts") >= col("arrival"))
+          .select(col("dst").as("id"), col("ts").as("cand"))
+          .groupBy(col("id")).agg(min(col("cand")).as("cand"))
+        val improved = cand.join(arr, Seq("id"), "left")
+          .filter(col("arrival").isNull || col("cand") < col("arrival"))
+          .select(col("id"), col("cand").as("arrival")).localCheckpoint(true)
+        if (improved.isEmpty) done = true
+        else {
+          arr = arr.join(improved.select(col("id")), Seq("id"), "left_anti")
+            .unionAll(improved).localCheckpoint(true)
+          frontier = improved
+        }
       }
+      arr
     }
-    arr
   }
 }

@@ -128,16 +128,11 @@ object Bpe {
       .select(explode(split(col("text"), " ")).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val merges =
-        if (words.count() <= driverVocabThreshold)
-          trainDriver(words.as[(String, Long)].collect().map {
-            case (w, c) => (seedSymbols(w), c)
-          }, numMerges, minPairFreq)
-        else trainDistributed(words, numMerges, minPairFreq, checkpointEvery)
-      spark.createDataset(merges).toDF("rank", "left", "right", "freq")
-    } finally { words.unpersist(); () }
+    val merges = graft.core.Adaptive.small(words, driverVocabThreshold)(rows =>
+      trainDriver(rows.map(r => (seedSymbols(r.getString(0)), r.getLong(1))),
+        numMerges, minPairFreq))(
+      trainDistributed(_, numMerges, minPairFreq, checkpointEvery))
+    spark.createDataset(merges).toDF("rank", "left", "right", "freq")
   }
 
   /** The argmax tie-break compares symbols in UTF-8 BYTE order — what
@@ -306,14 +301,11 @@ object Bpe {
     val spark = docs.sparkSession
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(merges)
-    // spread the map-only walk across the session's parallelism (the
-    // Similarity.spread discipline): the board's documents table is ONE
-    // parquet split, which would run the whole greedy-merge walk on one
-    // core; xxhash64-keyed so no upstream partitioning makes it
-    // redundant, scale-adaptive, row-set identical (pure per-row map)
-    docs.select(col("doc_id"), split(col("text"), " ").as("toks"))
-      .repartition(math.max(2, spark.sparkContext.defaultParallelism),
-        xxhash64(col("doc_id")))
+    // spread the map-only walk across the session's parallelism: the
+    // board's documents table is ONE parquet split, which would run the
+    // whole greedy-merge walk on one core; row-set identical (pure
+    // per-row map)
+    Similarity.spread(docs.select(col("doc_id"), split(col("text"), " ").as("toks")), "doc_id")
       .as[(Long, Seq[String])]
       .mapPartitions { it =>
         val ms = bc.value.toArray

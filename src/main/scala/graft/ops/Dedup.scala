@@ -708,7 +708,7 @@ object Dedup {
     val p1 = prefixes.join(okGrams, Seq("gram"))
     val p2 = p1.select(col("gram"), col("doc_id").as("doc2"),
       col("gsz").as("gsz2"), col("rn").as("rn2"))
-    val cands = p1.join(p2, Seq("gram"))
+    val candPairs = p1.join(p2, Seq("gram"))
       .filter(col("doc_id") < col("doc2") &&
         // PPJoin length filter: prune before carrying pairs any further
         col("gsz") * 100 >= col("gsz2") * minJaccardPct &&
@@ -720,21 +720,15 @@ object Dedup {
         first(col("gsz")).as("g1sz"), first(col("gsz2")).as("g2sz"))
       .filter(col("ub") * (100 + minJaccardPct) >= (col("g1sz") + col("g2sz")) * minJaccardPct)
       .select(col("doc_id").as("doc1"), col("doc2"))
-      // verification parallelism: the candidate frame is BYTE-small (two
-      // ids per row) so AQE coalesces its exchange to a couple of tasks,
-      // but each surviving candidate pays an array_intersect over the FULL
-      // gram arrays — compute-bound on small bytes (the ngramJaccardPairs
-      // AQE note above; measured: the whole verification stage ran as 3
-      // tasks). A user-specified repartition pins the stage width — keyed
-      // on xxhash64(doc1, doc2), NOT the raw pair, because the raw keys
-      // equal the upstream aggregation's grouping keys and
-      // EnsureRequirements prunes a same-key repartition (the
-      // syntheticMedia/spread() trap), putting the stage back on the
-      // AQE-coalesced agg exchange. The gram-array joins below broadcast,
-      // so no further exchange follows and the verification inherits this
-      // width.
-      .repartition(math.max(2, docs.sparkSession.sparkContext.defaultParallelism),
-        xxhash64(col("doc1"), col("doc2")))
+    // verification parallelism: the candidate frame is BYTE-small (two
+    // ids per row) so AQE coalesces its exchange to a couple of tasks,
+    // but each surviving candidate pays an array_intersect over the FULL
+    // gram arrays — compute-bound on small bytes (the ngramJaccardPairs
+    // AQE note above; measured: the whole verification stage ran as 3
+    // tasks). The spread pins the stage width; the gram-array joins
+    // below broadcast, so no further exchange follows and the
+    // verification inherits it.
+    val cands = Similarity.spread(candPairs, "doc1", "doc2")
     val verified = cands
       .join(withG.withColumnRenamed("doc_id", "doc1").withColumnRenamed("g", "g1"), Seq("doc1"))
       .join(withG.withColumnRenamed("doc_id", "doc2").withColumnRenamed("g", "g2"), Seq("doc2"))

@@ -239,15 +239,8 @@ object Multimodal {
     val ids0 = docs.select(col("doc_id"))
     val ids = if (residues.size == 3) ids0
       else ids0.filter(pmod(col("doc_id"), lit(3L)).isin(residues.toSeq: _*))
-    // key the spread on xxhash64(doc_id), NOT doc_id itself: an upstream
-    // aggregation (e.g. a distinct) already hash-partitions on doc_id, so
-    // a same-keyed repartition is pruned as redundant and AQE then
-    // coalesces the byte-small exchange to ONE task — collapsing the
-    // whole encode+decode stage back onto a single core (measured on the
-    // union+distinct media input)
-    ids.repartition(
-        math.max(2, spark.sparkContext.defaultParallelism),
-        xxhash64(col("doc_id")))
+    // spread the encode+decode stage across the session's parallelism
+    Similarity.spread(ids, "doc_id")
       .select(col("doc_id"))
       .as[Long]
       .mapPartitions { it =>

@@ -23,29 +23,30 @@ import org.apache.spark.sql.functions._
  */
 object Similarity {
 
-  /** Spread a corpus-side frame across the session's full parallelism
-    * before a compute-heavy scan stage (the optimization guide's §2.5
-    * input-skew remedy: "one huge unsplittable file — repartition
-    * immediately after the read"). The board's parquet tables arrive as
-    * ONE split, which capped every cosine/ADC scan at a single core of
-    * local[32] (measured: q191's whole 4M-pair cosine scan ran as ONE
-    * task); AQE cannot fix it because it sizes partitions by shuffle
-    * BYTES while these stages are compute-bound on small bytes. The
-    * repartition hashes the 8-byte id column — deterministic (no
+  /** Spread a frame across the session's full parallelism before a
+    * compute-heavy stage (the optimization guide's §2.5 input-skew
+    * remedy: "one huge unsplittable file — repartition immediately after
+    * the read"). The board's parquet tables arrive as ONE split, which
+    * capped every cosine/ADC scan at a single core of local[32]
+    * (measured: q191's whole 4M-pair cosine scan ran as ONE task); AQE
+    * cannot fix it because it sizes partitions by shuffle BYTES while
+    * these stages are compute-bound on small bytes. Deterministic (no
     * round-robin sort-before-repartition, no retry hazard), scale-
     * adaptive (defaultParallelism = total cores, never a tuned
-    * constant), and its shuffle moves only ids+vectors once before the
-    * quadratic-cost scan it feeds. Results unchanged: every operator
-    * here is partition-invariant (spec-tested at multiple
-    * partitionings). */
-  private def spread(df: DataFrame, key: String = "vec_id"): DataFrame =
-    // xxhash64(key), not the key itself: a same-keyed upstream exchange
-    // (aggregation/join) would make this repartition redundant, and the
-    // byte-small surviving exchange then AQE-coalesces to one task —
-    // exactly the single-core collapse this call exists to prevent
+    * constant), and row-set identical: every caller is
+    * partition-invariant (spec-tested at multiple partitionings).
+    *
+    * SAME-KEY-PRUNE TRAP: the partitioning is xxhash64(keys), never the
+    * raw keys. When an upstream exchange (aggregation, distinct, join)
+    * already hash-partitions on the same raw keys, EnsureRequirements
+    * prunes a same-key repartition as redundant, and AQE then coalesces
+    * the byte-small surviving exchange to ONE task — exactly the
+    * single-core collapse this call exists to prevent (measured on the
+    * synthetic-media encode over a union+distinct input). */
+  private[ops] def spread(df: DataFrame, keys: String*): DataFrame =
     df.repartition(
       math.max(2, df.sparkSession.sparkContext.defaultParallelism),
-      xxhash64(col(key)))
+      xxhash64(keys.map(col): _*))
 
   /** Cosine similarity of two array<float> columns — the codegen'd native
     * expression (graft.functions.CosineSim). Bit-identical to `cosineHof`
@@ -79,7 +80,8 @@ object Similarity {
   def bruteForceTopK(emb: DataFrame, queryFilter: Column, k: Int): DataFrame = {
     val queries = emb.filter(queryFilter)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val scored = spread(emb).select(col("vec_id").as("neighbor_id"), col("embedding").as("nv"))
+    val scored = spread(emb, "vec_id")
+      .select(col("vec_id").as("neighbor_id"), col("embedding").as("nv"))
       .join(broadcast(queries), col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine", cosine(col("qv"), col("nv")))
     TopK.rankTopK(scored, "query_id", "neighbor_id", round(col("cosine"), 9), k)
@@ -435,7 +437,7 @@ object Similarity {
       while (i < cent.length) { ns += cent(i).toDouble * cent(i).toDouble; i += 1 }
       ns
     })
-    val codes = spread(emb).select(col("vec_id").as("neighbor_id"),
+    val codes = spread(emb, "vec_id").select(col("vec_id").as("neighbor_id"),
       pq_encode(col("embedding"), books).as("code"))
     val queries = emb.filter(queryFilter)
       .select(col("vec_id").as("query_id"), pq_lut(col("embedding"), books).as("lut"))
@@ -502,7 +504,7 @@ object Similarity {
     val bcCoarse = spark.sparkContext.broadcast(coarse)
     // one partition-local pass: coarse list assignment (the float
     // embedding column is read here at encode time and never again)
-    val assigned = spread(emb).select(col("vec_id"), col("embedding"))
+    val assigned = spread(emb, "vec_id").select(col("vec_id"), col("embedding"))
       .as[(Long, Array[Float])]
       .mapPartitions { it =>
         val cs = bcCoarse.value
@@ -665,7 +667,7 @@ object Similarity {
     // assignment: nearest centroid per vector — mapPartitions kernel over
     // the broadcast codebook (tight JVM loop; one pass, stays partition-local
     // after the id-hash spread of the single-split source)
-    val assigned = spread(emb).select(col("vec_id"), col("embedding"))
+    val assigned = spread(emb, "vec_id").select(col("vec_id"), col("embedding"))
       .as[(Long, Array[Float])]
       .mapPartitions { it =>
         val cs = bcCents.value
@@ -875,7 +877,7 @@ object Similarity {
       return emb.limit(0).select(col("vec_id").as("a"), col("vec_id").as("b"),
         lit(1).as("rank_ab"), lit(1).as("rank_ba"))
     val bcCents = spark.sparkContext.broadcast(cents)
-    val assigned = spread(emb).select(col("vec_id"), col("embedding"))
+    val assigned = spread(emb, "vec_id").select(col("vec_id"), col("embedding"))
       .as[(Long, Array[Float])]
       .mapPartitions { it =>
         val cs = bcCents.value
@@ -1090,7 +1092,7 @@ object Similarity {
     val pre = (c: Column) => slice(c, 1, prefixDims)
     val queries = emb.filter(queryFilter)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val cands = spread(emb)
+    val cands = spread(emb, "vec_id")
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("nv"))
     // stage 1: prefix-cosine shortlist over the whole corpus
     val coarse = TopK.rankTopK(
@@ -1145,7 +1147,7 @@ object Similarity {
   /** SQ8 approximate top-k: same output/order contract as the ANN family
     * ((query_id, neighbor_id, rank), round-9 DESC, id ASC, self excluded). */
   def sq8TopK(emb: DataFrame, queryFilter: Column, k: Int): DataFrame = {
-    val enc = sq8Encode(spread(emb))
+    val enc = sq8Encode(spread(emb, "vec_id"))
     val queries = enc.filter(queryFilter)
       .select(col("vec_id").as("query_id"), col("code").as("qc"),
         col("ssq").as("qssq"))

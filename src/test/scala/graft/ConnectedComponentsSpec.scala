@@ -31,9 +31,9 @@ class ConnectedComponentsSpec extends SparkSpec {
     // default threshold routes these small graphs to the driver path
     val adaptive = ConnectedComponents.run(df).as[(Long, Long)].collect().toMap
     assert(adaptive == oracle, "adaptive small-graph path vs union-find")
-    val prop = ConnectedComponents.minLabelPropagation(df).as[(Long, Long)].collect().toMap
+    val prop = CcOracles.minLabelPropagation(df).as[(Long, Long)].collect().toMap
     assert(prop == oracle, "min-label propagation vs union-find")
-    val gx = ConnectedComponents.runGraphX(df).as[(Long, Long)].collect().toMap
+    val gx = CcOracles.runGraphX(df).as[(Long, Long)].collect().toMap
     assert(gx == oracle, "GraphX fallback vs union-find")
   }
 
