@@ -127,14 +127,11 @@ object Pipeline {
     // NER stage at its split count)
     val parts = math.max(spark.sparkContext.defaultParallelism * 2, 4)
     val sents = NerStage.saltedRepartition(NerStage.sentences(pending), parts, parts)
-    // persist: writeResumable runs two actions (partition discovery + write);
-    // the cache ensures one inference pass and single-counted accumulators
     val tagged = NerStage.tag(sents, bc, useViterbi, lineage = Some(lineage),
-      tokenCounter = Some(tokensSeen), oovCounter = Some(unknownWords)).persist()
+      tokenCounter = Some(tokensSeen), oovCounter = Some(unknownWords))
     val raw = NerStage.rawTriples(tagged, lex)
     val triples = graft.kg.Triples.canonicalTriples(raw, aliasDict(spark, sfDir), canonMap(spark, sfDir))
     val written = graft.core.TableIO.writeResumable(triples.toDF(), outRoot, "lang")
-    tagged.unpersist()
     val rows = scala.jdk.CollectionConverters.ListHasAsScala(lineage.value).asScala.toSeq
     if (rows.nonEmpty) graft.core.TableIO.writeLineage(outRoot, "ner.tag", rows)
     RunReport(written, rows.size, tokensSeen.value, unknownWords.value)

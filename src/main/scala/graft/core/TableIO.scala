@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
@@ -35,11 +36,8 @@ object TableIO {
       .filter(_.getFileName.toString.matches("snapshot-\\d+\\.json"))
       .toSeq).sortBy(_.getFileName.toString)
       .map { p =>
-        val s = new String(Files.readAllBytes(p), "UTF-8")
         val id = p.getFileName.toString.stripPrefix("snapshot-").stripSuffix(".json").toInt
-        // values are JSON-escaped strings in a flat array
-        val vals = "\"((?:[^\"\\\\]|\\\\.)*)\"".r.findAllMatchIn(
-          s.dropWhile(_ != '[')).map(_.group(1)).toSeq
+        val vals = json.readTree(p.toFile).get("completed").elements().asScala.map(_.asText).toSeq
         Snapshot(id, vals)
       }
   }
@@ -53,56 +51,72 @@ object TableIO {
     Files.createDirectories(d)
     val next = listSnapshots(root).map(_.id).maxOption.getOrElse(-1) + 1
     val all = (completedPartitions(root) ++ completed).toSeq.sorted
-    val json = all.map(v => "\"" + v.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
-      .mkString("[", ",", "]")
     val tmp = d.resolve(s".snapshot-$next.json.tmp")
-    Files.write(tmp, s"""{"snapshot": $next, "completed": $json}""".getBytes("UTF-8"))
+    Files.write(tmp, s"""{"snapshot": $next, "completed": ${all.map(jsonString).mkString("[", ",", "]")}}"""
+      .getBytes("UTF-8"))
     Files.move(tmp, d.resolve(s"snapshot-$next.json"), StandardCopyOption.ATOMIC_MOVE)
     next
   }
 
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** `s` as a JSON string literal: quotes, backslashes and control
+    * characters escaped, so any stage name, detail or partition value
+    * reads back intact. */
+  private def jsonString(s: String): String = json.writeValueAsString(s)
+
   /**
-   * Resumable partitioned write of `df` by string column `partCol`: skips
-   * partition values already committed, writes the rest partition-by-lang
-   * directory layout, then commits a new snapshot. Returns the partition
-   * values written this run.
+   * Resumable partitioned write of `df` by column `partCol`: skips
+   * partition values already committed, writes the rest in one pass in the
+   * `<partCol>=<value>` directory layout, then commits a new snapshot.
+   * Returns the partition values written this run, sorted.
    *
-   * Crash-atomicity: the parquet append and the snapshot commit are two
-   * steps, so a failure between them can leave files for a partition the
-   * snapshot does not record. To keep the resume contract (a partition is
-   * either fully committed or fully rewritten, never duplicated), every
-   * UNCOMMITTED todo partition's directory is deleted before its rewrite —
-   * files not covered by a snapshot are by definition leftovers of a failed
-   * attempt. `read(spark, root, partCol)` additionally filters to committed
-   * partition values, so readers never see a half-written partition.
+   * There is no pre-scan for the input's partition values, so `df` is
+   * computed once. Before the write, every `<partCol>=` directory whose
+   * value no snapshot covers is deleted: the parquet append and the
+   * snapshot commit are two steps, so such files are by definition
+   * leftovers of a failed attempt, and a partition is either fully
+   * committed or fully rewritten, never duplicated. After the write, the
+   * uncommitted directories are exactly the ones this write created; their
+   * unescaped values are what gets committed. `read(spark, root, partCol)`
+   * additionally filters to committed partition values, so readers never
+   * see a half-written partition.
+   *
+   * A null (or, as Spark writes it, empty-string) partition value lands in
+   * Spark's default-partition directory, which no value can name: the call
+   * then deletes what it wrote, commits nothing and throws.
    */
   def writeResumable(df: DataFrame, root: String, partCol: String): Seq[String] = {
-    val spark = df.sparkSession
     recoverCompactLeftovers(root)
     val done = completedPartitions(root)
-    val values = df.select(col(partCol)).distinct()
-      .collect().map(_.get(0).toString).toSeq.sorted
-    val todo = values.filterNot(done)
-    if (todo.nonEmpty) {
-      todo.foreach { v =>
-        deleteRecursively(Paths.get(root, "data",
-          s"$partCol=${escapePartitionValue(v)}"))
-      }
-      val pending = df.filter(col(partCol).isInCollection(todo))
-      pending.write.mode("append").partitionBy(partCol).parquet(s"$root/data")
-      commitSnapshot(root, todo)
+    uncommittedDirs(root, partCol, done).foreach { case (dir, _) => deleteRecursively(dir) }
+    // nulls stay in, so that their default-partition directory fails below
+    val pending = if (done.isEmpty) df
+      else df.filter(col(partCol).isNull || !col(partCol).isInCollection(done))
+    pending.write.mode("append").partitionBy(partCol).parquet(s"$root/data")
+    val created = uncommittedDirs(root, partCol, done)
+    if (created.exists(_._2 == ExternalCatalogUtils.DEFAULT_PARTITION_NAME)) {
+      created.foreach { case (dir, _) => deleteRecursively(dir) }
+      throw new IllegalArgumentException(
+        s"writeResumable: null or empty '$partCol' values under $root; nothing committed")
     }
-    todo
+    val written = created.map(_._2).sorted
+    if (written.nonEmpty) commitSnapshot(root, written)
+    written
   }
 
-  /** Hive-style partition-directory escaping for the unsafe path chars
-    * Spark escapes on write (sufficient for the values this pipeline
-    * partitions by; full list in Spark's ExternalCatalogUtils). */
-  private def escapePartitionValue(v: String): String =
-    v.flatMap {
-      case c if c < ' ' || "\"#%'*/:=?\\{[]^".contains(c) => f"%%${c.toInt}%02X"
-      case c => c.toString
-    }
+  /** The `<partCol>=<value>` directories under `root/data` whose unescaped
+    * value is not in `done`, with that value. */
+  private def uncommittedDirs(root: String, partCol: String,
+                              done: Set[String]): Seq[(java.nio.file.Path, String)] = {
+    val data = Paths.get(root, "data")
+    if (!Files.isDirectory(data)) return Nil
+    val prefix = s"$partCol="
+    Using.resource(Files.list(data))(_.iterator().asScala.toList)
+      .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith(prefix))
+      .map(p => p -> ExternalCatalogUtils.unescapePathName(p.getFileName.toString.stripPrefix(prefix)))
+      .filterNot { case (_, v) => done(v) }
+  }
 
   private def deleteRecursively(p: java.nio.file.Path): Unit = {
     if (Files.exists(p)) {
@@ -140,11 +154,11 @@ object TableIO {
     val d = Paths.get(root, "_lineage")
     Files.createDirectories(d)
     val n = Using.resource(Files.list(d))(_.iterator().asScala.count(_ => true))
-    val json = rows.map { r =>
-      s"""{"stage":"${r.stage}","partition":${r.partitionId},"rowsIn":${r.rowsIn},""" +
-      s""""rowsOut":${r.rowsOut},"wallMs":${r.wallMs},"detail":"${r.detail}"}"""
+    val body = rows.map { r =>
+      s"""{"stage":${jsonString(r.stage)},"partition":${r.partitionId},"rowsIn":${r.rowsIn},""" +
+      s""""rowsOut":${r.rowsOut},"wallMs":${r.wallMs},"detail":${jsonString(r.detail)}}"""
     }.mkString("[", ",", "]")
-    Files.write(d.resolve(s"$stage-$n.json"), json.getBytes("UTF-8"))
+    Files.write(d.resolve(s"$stage-$n.json"), body.getBytes("UTF-8"))
   }
 
   /** Read back the data written by writeResumable. */
@@ -196,7 +210,7 @@ object TableIO {
     recoverCompactLeftovers(root)
     val done = completedPartitions(root).toSeq.sorted
     val rewritten = done.filter { v =>
-      val dir = Paths.get(root, "data", s"$partCol=${escapePartitionValue(v)}")
+      val dir = Paths.get(root, "data", s"$partCol=${ExternalCatalogUtils.escapePathName(v)}")
       Files.isDirectory(dir) && {
         val nFiles = Using.resource(Files.list(dir))(_.iterator().asScala
           .count(_.getFileName.toString.endsWith(".parquet")))
@@ -204,7 +218,7 @@ object TableIO {
       }
     }
     rewritten.foreach { v =>
-      val dirName = s"$partCol=${escapePartitionValue(v)}"
+      val dirName = s"$partCol=${ExternalCatalogUtils.escapePathName(v)}"
       val dir = Paths.get(root, "data", dirName)
       val tmp = Paths.get(root, "data", s".compact-$dirName.tmp")
       deleteRecursively(tmp)

@@ -2,6 +2,7 @@ package graft.ner
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Per-language model registry — the Spark-native form of the reference's
@@ -18,6 +19,8 @@ import org.apache.spark.sql.functions._
  *    scan order and is partition-count invariant. The position key is the
  *    (url, sentIdx, tokIdx, charIdx) tuple, aggregated distributedly (no
  *    global row_number — that would serialize the corpus through one task);
+ *    the vocabulary-sized aggregate is collected unsorted and sorted on the
+ *    driver in Spark's own order (binary UTF-8 strings, natural ints);
  *  - tag vocab is fixed IOBES over {PER, LOC, ORG, MISC} (lowercased in the
  *    vocab, uppercased on output, vocab.py:71 / NeuralNER.py:331).
  */
@@ -44,9 +47,10 @@ object Models {
   }
 
   /** Tokens with a lexicographically ordered position key: only the agg
-    * (vocab-sized) output is ever sorted or collected. One pass for ALL
-    * languages (lang is just another grouping column). */
-  private def positionedTokens(sentences: Dataset[graft.core.Sentence]): DataFrame = {
+    * (vocab-sized) output is ever collected, and it is sorted on the driver
+    * ([[firstOccurrences]]). One pass for ALL languages (lang is just
+    * another grouping column). */
+  private[graft] def positionedTokens(sentences: Dataset[graft.core.Sentence]): DataFrame = {
     val spark = sentences.sparkSession
     import spark.implicits._
     sentences
@@ -54,54 +58,65 @@ object Models {
       .toDF("lang", "url", "sentIdx", "tokIdx", "tok")
   }
 
-  /** First-occurrence-ordered characters per language, one distributed agg. */
-  private def charOrderByLang(positioned: DataFrame): Map[String, Seq[String]] = {
-    val spark = positioned.sparkSession
+  /** One vocabulary entry: its language, its string, its first position
+    * (url, sentIdx, tokIdx, charIdx) and its number of occurrences. */
+  private final case class First(lang: String, key: String, url: String,
+                                 sentIdx: Int, tokIdx: Int, charIdx: Int, cnt: Long)
+
+  /** Spark's ascending string order, which `orderBy` would use: binary
+    * UTF-8, nulls first. `String.compareTo` compares UTF-16 code units and
+    * disagrees with it between supplementary characters and U+E000..U+FFFF. */
+  private val sparkStringOrder: Ordering[UTF8String] = (a, b) =>
+    if (a == null || b == null) java.lang.Boolean.compare(a != null, b != null)
+    else a.compareTo(b)
+
+  /** Groups `units` (columns lang, key, url, sentIdx, tokIdx, charIdx) by
+    * (lang, key) and returns each group's first position and count in
+    * first-occurrence order: ascending (lang, first position, key). The
+    * aggregate is vocabulary-sized and the driver holds all of it after the
+    * collect anyway, so it is sorted there, which spares a distributed
+    * `orderBy` its range-partition sampling job and sort exchange. */
+  private def firstOccurrences(units: DataFrame): Seq[First] = {
+    val spark = units.sparkSession
     import spark.implicits._
-    positioned
-      .select($"lang", $"url", $"sentIdx", $"tokIdx",
-        posexplode(udfCps($"tok")).as(Seq("charIdx", "ch")))
-      .groupBy($"lang", $"ch")
-      .agg(min(struct($"url", $"sentIdx", $"tokIdx", $"charIdx")).as("first"))
-      .orderBy($"lang", $"first", $"ch")
-      .select($"lang", $"ch").as[(String, String)].collect()
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
+    val firsts = units.groupBy($"lang", $"key")
+      .agg(min(struct($"url", $"sentIdx", $"tokIdx", $"charIdx")).as("first"), count(lit(1)).as("cnt"))
+      .select($"lang", $"key", $"first.*", $"cnt").as[First].collect()
+    def u(s: String) = UTF8String.fromString(s)
+    val order = Ordering.Tuple6(sparkStringOrder, sparkStringOrder, Ordering.Int, Ordering.Int,
+      Ordering.Int, sparkStringOrder)
+    firsts.map(f => (u(f.lang), u(f.url), f.sentIdx, f.tokIdx, f.charIdx, u(f.key)) -> f)
+      .sortBy(_._1)(order).map(_._2).toSeq
   }
 
-  /** First-occurrence-ordered distinct lowercased tokens per language. */
-  private def wordOrderByLang(positioned: DataFrame): Map[String, Seq[String]] = {
+  /** Every character of every token, one row each, as [[firstOccurrences]] units. */
+  private def charUnits(positioned: DataFrame, byLang: Boolean): DataFrame = {
     val spark = positioned.sparkSession
     import spark.implicits._
-    positioned
-      .select($"lang", struct($"url", $"sentIdx", $"tokIdx").as("pos"), lower($"tok").as("tok"))
-      .groupBy($"lang", $"tok").agg(min($"pos").as("first"))
-      .orderBy($"lang", $"first", $"tok")
-      .select($"lang", $"tok").as[(String, String)].collect()
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
+    positioned.select(if (byLang) $"lang" else lit("").as("lang"), $"url", $"sentIdx", $"tokIdx",
+      posexplode(udfCps($"tok")).as(Seq("charIdx", "key")))
   }
+
+  /** Every lowercased token, one row each, as [[firstOccurrences]] units. */
+  private def wordUnits(positioned: DataFrame, byLang: Boolean): DataFrame = {
+    val spark = positioned.sparkSession
+    import spark.implicits._
+    positioned.select(if (byLang) $"lang" else lit("").as("lang"), $"url", $"sentIdx", $"tokIdx",
+      lit(0).as("charIdx"), lower($"tok").as("key"))
+  }
+
+  /** Each language's keys in first-occurrence order. */
+  private def keysByLang(firsts: Seq[First]): Map[String, Seq[String]] =
+    firsts.groupBy(_.lang).view.mapValues(_.map(_.key)).toMap
 
   /** Distributed char-vocab build: characters of every token, indexed in
     * first-occurrence order (deterministic; equals the reference's
     * sequential readCoNLL order for the same row order). */
   def buildCharVocab(positioned: DataFrame): Vocab = {
-    val spark = positioned.sparkSession
-    import spark.implicits._
-    val chars = positioned
-      .select($"url", $"sentIdx", $"tokIdx", explode(
-        udfCodePoints($"tok")).as("chpos"))
-      .select(struct($"url", $"sentIdx", $"tokIdx", $"chpos._2".as("charIdx")).as("pos"),
-        $"chpos._1".as("ch"))
-    val ordered = chars.groupBy($"ch").agg(min($"pos").as("first"))
-      .orderBy($"first", $"ch")
-      .select($"ch").as[String].collect()
     val v = Vocab.newCharVocab()
-    ordered.foreach(v.add)
+    firstOccurrences(charUnits(positioned, byLang = false)).foreach(f => v.add(f.key))
     v.freeze()
     v
-  }
-
-  private val udfCodePoints = udf { (tok: String) =>
-    graft.text.TextExtract.codePoints(tok).zipWithIndex
   }
 
   private val udfCps = udf { (tok: String) => graft.text.TextExtract.codePoints(tok) }
@@ -109,16 +124,9 @@ object Models {
   /** Distributed word-frequency vocab (A1/A2 semantics: lowercased counts,
     * `trim` keeps count > threshold; vocab.py:61-81,169-184). */
   def buildWordVocab(positioned: DataFrame, trimThreshold: Long = -1L): Vocab = {
-    val spark = positioned.sparkSession
-    import spark.implicits._
-    val ordered = positioned
-      .select(struct($"url", $"sentIdx", $"tokIdx").as("pos"), lower($"tok").as("tok"))
-      .groupBy($"tok").agg(min($"pos").as("first"), count(lit(1)).as("cnt"))
-      .orderBy($"first", $"tok")
-      .select($"tok", $"cnt").as[(String, Long)].collect()
     val v = new Vocab(caseSensitive = false)
-    ordered.foreach { case (t, c) =>
-      v.add(t); v.tokCounts(t) = c // set true corpus frequency
+    firstOccurrences(wordUnits(positioned, byLang = false)).foreach { f =>
+      v.add(f.key); v.tokCounts(f.key) = f.cnt // set true corpus frequency
     }
     if (trimThreshold >= 0) v.trim(trimThreshold)
     v.freeze()
@@ -127,14 +135,8 @@ object Models {
 
   /** First-occurrence-ordered distinct lowercased tokens (embedding fixture
     * key order — load_embeddings is file-order first-wins). */
-  def wordOrder(positioned: DataFrame): Array[String] = {
-    val spark = positioned.sparkSession
-    import spark.implicits._
-    positioned
-      .select(struct($"url", $"sentIdx", $"tokIdx").as("pos"), lower($"tok").as("tok"))
-      .groupBy($"tok").agg(min($"pos").as("first"))
-      .orderBy($"first", $"tok").select($"tok").as[String].collect()
-  }
+  def wordOrder(positioned: DataFrame): Array[String] =
+    firstOccurrences(wordUnits(positioned, byLang = false)).map(_.key).toArray
 
   /**
    * Build a deterministic model registry for the given languages from a
@@ -221,8 +223,8 @@ object Models {
     val sharedTv = tagVocab()
     val positioned = positionedTokens(sentences).persist()
     try {
-      val charOrders = charOrderByLang(positioned)
-      val wordOrders = wordOrderByLang(positioned)
+      val charOrders = keysByLang(firstOccurrences(charUnits(positioned, byLang = true)))
+      val wordOrders = keysByLang(firstOccurrences(wordUnits(positioned, byLang = true)))
       charOrders.keys.toSeq.sorted.map { lg =>
         // per-language tag space when provided (Yang's aux tag vocab,
         // NeuralNERYang/NeuralNERYang.py:63-64,106,157; NoOutput's

@@ -19,14 +19,23 @@ import pyarrow.parquet as pq
 # (q181/q186/q192/q194/q195/q198); after the r6 Spark-side casts it
 # reports 0 fails.
 
+# usage: compare_oracle.py [sfdir] [outdir] [name,name,...]
+# The optional third argument compares only the listed queries (exact
+# names as in oracle_sql.json); without it every query is compared.
 sfdir = sys.argv[1] if len(sys.argv) > 1 else '/root/testdata/sf0.001'
 outdir = sys.argv[2] if len(sys.argv) > 2 else '/tmp/verify_sf0001'
+only = [n for n in sys.argv[3].split(',') if n] if len(sys.argv) > 3 else None
 
 con = duckdb.connect()
 for tbl in ['region','nation','customer','supplier','part','orders','lineitem','events','documents','embeddings']:
     con.execute(f"CREATE VIEW {tbl} AS SELECT * FROM '{sfdir}/{tbl}.parquet'")
 
 oracle = json.load(open(f'{outdir}/oracle_sql.json'))
+if only is not None:
+    unknown = sorted(set(only) - set(oracle))
+    if unknown:
+        sys.exit(f'unknown query names: {unknown}')
+    oracle = {n: oracle[n] for n in only}
 
 def norm(v):
     # type-tagged: floats never compare equal to exact (int/Decimal)
