@@ -132,7 +132,10 @@ object Pipeline {
     val raw = NerStage.rawTriples(tagged, lex)
     val triples = graft.kg.Triples.canonicalTriples(raw, aliasDict(spark, sfDir), canonMap(spark, sfDir))
     val written = graft.core.TableIO.writeResumable(triples.toDF(), outRoot, "lang")
-    val rows = scala.jdk.CollectionConverters.ListHasAsScala(lineage.value).asScala.toSeq
+    // a rerun over committed partitions still reports its (empty) NER
+    // partitions; lineage describes work done, so such a run writes none
+    val reported = scala.jdk.CollectionConverters.ListHasAsScala(lineage.value).asScala.toSeq
+    val rows = if (reported.exists(_.rowsIn > 0)) reported else Nil
     if (rows.nonEmpty) graft.core.TableIO.writeLineage(outRoot, "ner.tag", rows)
     RunReport(written, rows.size, tokensSeen.value, unknownWords.value)
   }

@@ -1875,7 +1875,7 @@ object SparkEntry {
   private def SparqlValuesIdsSql: String = SparqlValuesIds.mkString(", ")
 
   /** Golden-fixture oracle: DuckDB reads the committed parquet written by
-    * graft.golden.GoldenGen (the sequential twin — NaiveKernel dense math,
+    * GoldenGen, the sequential twin under src/test (NaiveKernel dense math,
     * union-find canonicalizer, independent XXH64). Verify substitutes
     * __SF__ with the sf directory name at dump time. The fixture root is
     * overridable (repo relocation / alternate fixture sets) via

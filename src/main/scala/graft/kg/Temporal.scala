@@ -179,8 +179,8 @@ object Temporal {
 
   /** Per-(key, bucket) event counts — the mergeable burst-detection
     * state: counts from disjoint event slices (micro-batches, shards)
-    * SUM to the counts of their union, so a streaming twin can log
-    * deltas and fold. Output: keys* ++ (__b: bucket index, __c). */
+    * SUM to the counts of their union, so a caller can log deltas and
+    * fold. Output: keys* ++ (__b: bucket index, __c). */
   def bucketCounts(eventsIn: DataFrame, keys: Seq[String], tsCol: String,
                    bucketMicros: Long): DataFrame = {
     require(bucketMicros > 0, "bucketMicros must be > 0")

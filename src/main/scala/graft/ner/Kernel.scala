@@ -119,9 +119,8 @@ object Kernel {
   @inline private def sigmoidF(x: Float): Float = (1.0 / (1.0 + math.exp(-x.toDouble))).toFloat
   @inline private def tanhF(x: Float): Float = math.tanh(x.toDouble).toFloat
 
-  /** xGates token-tile width (bandwidth tuning only; any value is exact).
-    * Resolved once per JVM. */
-  private val tileSize: Int = sys.env.getOrElse("SPARK_GRAFT_TILE", "128").toInt
+  /** xGates token-tile width (bandwidth tuning only; any value is exact). */
+  private val tileSize: Int = 128
 
   /** Dot product with 4 independent accumulators — HotSpot won't vectorize
     * float reductions (reassociation), so manual ILP unrolling is the

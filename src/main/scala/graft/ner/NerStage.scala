@@ -1,7 +1,7 @@
 package graft.ner
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.CollectionAccumulator
 import graft.core._
@@ -155,7 +155,7 @@ object NerStage {
 
   /** Sentences per kernel micro-batch (bandwidth amortization only — any
     * value yields identical results). */
-  val microBatchSize: Int = sys.env.getOrElse("SPARK_GRAFT_MICROBATCH", "64").toInt
+  val microBatchSize: Int = 64
 
   /** The per-sentence serving function: encode (word ids with lowercased
     * `<unk>` fallback, utilsLocal.py:318-324; code-point chars), BiLSTM,
@@ -257,15 +257,4 @@ object NerStage {
   val defaultPredicateLexicon: Set[String] = Set(
     "join", "merge", "sort", "scan", "stream", "order", "hash", "batch",
     "is", "has", "was", "are", "of", "in", "by", "with", "to")
-
-  /** End-to-end mention detection from pages (the flagship path). */
-  def mentionsFromPages(spark: SparkSession, pages: Dataset[Page],
-                        models: Map[String, Models.LangModel],
-                        useViterbi: Boolean = false): Dataset[Mention] = {
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(models)
-    val parts = math.max(spark.sparkContext.defaultParallelism, 1)
-    val sents = saltedRepartition(sentences(pages), parts, parts)
-    mentions(tag(sents, bc, useViterbi))
-  }
 }

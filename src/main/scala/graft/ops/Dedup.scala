@@ -768,8 +768,7 @@ object Dedup {
     * exceed |corpus| / maxBucket or every bucket saturates and the
     * operator finds nothing. The 64/4 default gives 2^16 buckets per band
     * (~16M vectors at the default cap); the old 16/4 default gave 16 (!)
-    * bucket values per band and died past ~4k vectors. Matches the
-    * streaming twin's geometry (StreamIngest.embeddingNearDupBatchStep). */
+    * bucket values per band and died past ~4k vectors. */
   def embeddingNearDup(emb: DataFrame, threshold: Double = 0.95,
                        planes: Int = 64, bands: Int = 4, maxBucket: Int = 256): DataFrame = {
     require(planes % bands == 0, "planes must be divisible by bands")
@@ -792,8 +791,11 @@ object Dedup {
     val withSig = persistIntermediate(emb.select(col("vec_id"),
       graft.functions.GraftFunctions.signlsh_bits(col("embedding"),
         signlshPlanes(dim, planes)).as("bits")))
+    // posexplode of the `bands` per-band bucket codes of the bits column
     val banded = withSig.select(col("vec_id").as("doc_id"),
-      bandPosexplode(bands, rows).as(Seq("band", "bucket")))
+      posexplode(transform(sequence(lit(0), lit(bands - 1)), b =>
+        aggregate(slice(col("bits"), b * lit(rows) + 1, lit(rows)),
+          lit(0L), (a, bit) => a * 2 + bit))).as(Seq("band", "bucket")))
     val vecs = emb.select(col("vec_id"), col("embedding"))
     val verified = idPairsFromBuckets(banded, maxBucket, dropLabel = "embeddingNearDup")
       .join(vecs.withColumnRenamed("vec_id", "doc1").withColumnRenamed("embedding", "e1"), Seq("doc1"))
@@ -808,7 +810,7 @@ object Dedup {
     * a (planes × dim) model artifact derived from xxhash64 parity of
     * "plane<p>:<i>", identical on the driver, in the codegen'd
     * expression, and in the sequential twin. */
-  private[graft] def signlshPlanes(dim: Int, planes: Int): Array[Array[Float]] =
+  private def signlshPlanes(dim: Int, planes: Int): Array[Array[Float]] =
     Array.tabulate(planes) { p =>
       Array.tabulate(dim) { i =>
         val h = graft.functions.Xxh64.hashString(s"plane$p:$i",
@@ -816,31 +818,4 @@ object Dedup {
         (((h % 2 + 2) % 2) * 2 - 1).toFloat
       }
     }
-
-  /** posexplode of the `bands` per-band bucket codes from a `bits`
-    * column ([[graft.functions.GraftFunctions.signlsh_bits]] output). */
-  private[graft] def bandPosexplode(bands: Int, rows: Int) =
-    posexplode(transform(sequence(lit(0), lit(bands - 1)), b =>
-      aggregate(slice(col("bits"), b * lit(rows) + 1, lit(rows)),
-        lit(0L), (a, bit) => a * 2 + bit)))
-
-  /** Sign-LSH band rows (vec_id, band, bucket) of an embedding table —
-    * [[embeddingNearDup]]'s banding exposed for the streaming state
-    * table (`StreamIngest.embeddingNearDupBatchStep` stores state
-    * PRE-BANDED, the nearDupBatchStep convention). Empty input yields an
-    * empty frame with the right schema. */
-  private[graft] def signlshBanded(emb: DataFrame, planes: Int,
-                                   bands: Int): DataFrame = {
-    require(planes % bands == 0, "planes must be divisible by bands")
-    val rows = planes / bands
-    val dimRow = emb.select(size(col("embedding"))).limit(1).collect()
-    if (dimRow.isEmpty)
-      return emb.limit(0).select(col("vec_id"),
-        lit(0).as("band"), lit(0L).as("bucket"))
-    val dim = dimRow(0).getInt(0)
-    emb.select(col("vec_id"),
-        graft.functions.GraftFunctions.signlsh_bits(col("embedding"),
-          signlshPlanes(dim, planes)).as("bits"))
-      .select(col("vec_id"), bandPosexplode(bands, rows).as(Seq("band", "bucket")))
-  }
 }

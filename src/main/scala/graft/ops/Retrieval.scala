@@ -73,9 +73,8 @@ object Retrieval {
    * no safe unpersist point (the returned frame is lazy), and at scale
    * the real deployment never takes this path at all: it maintains a
    * PERSISTED postings index + running scalars and serves queries
-   * through [[bm25FromPostings]] (the streaming index does exactly
-   * that), so the double scan is confined to the build-from-scratch
-   * convenience entry point.
+   * through [[bm25FromPostings]], so the double scan is confined to the
+   * build-from-scratch convenience entry point.
    */
   def bm25TopK(docs: DataFrame, queries: DataFrame, k: Int,
                k1Num: Long = 6L, k1Den: Long = 5L,
@@ -98,9 +97,8 @@ object Retrieval {
   }
 
   /**
-   * The postings-level BM25 core — shared by the batch operator (postings
-   * built in-pass) and the STREAMING index (postings folded from the
-   * per-batch delta log, [[graft.streaming.StreamIngest.postingsBatchStep]]):
+   * The postings-level BM25 core — the batch operator builds its postings
+   * in-pass; a caller that maintains a persisted index passes its own:
    * identical integer algebra over whatever (doc_id, term, tf, dl) frame
    * and (nDocs, totTok) scalars the caller maintains.
    */

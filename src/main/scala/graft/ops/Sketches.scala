@@ -392,8 +392,8 @@ object Sketches {
    * cell[d][h_d(t)] += s_d(t) with h from the [[CmAgg]] Xxh64 chain
    * (seed d) and the ±1 sign from an INDEPENDENT chain (seed d + depth,
    * lowest bit). Cells are plain integer sums — shuffle-order-invariant,
-   * counterwise-mergeable (the linear-sketch property the streaming fold
-   * relies on), state depth·width longs per group forever.
+   * counterwise-mergeable (the linear-sketch property), state depth·width
+   * longs per group forever.
    */
   final class AmsAgg(depth: Int, width: Int)
       extends Aggregator[String, Array[Long], Array[Long]] {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.ops.Sketches
 
 class F2Spec extends SparkSpec {
@@ -71,39 +70,5 @@ class F2Spec extends SparkSpec {
     got.foreach { case (g, err) =>
       assert(err <= 250L, s"group $g err_permille $err exceeds the documented bound")
     }
-  }
-
-  test("streaming AMS fold == one-pass batch sketch bit-for-bit; as-of; exact replay") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.Trigger
-    import graft.streaming.StreamIngest
-    implicit val sq = spark.sqlContext
-    val stateRoot = java.nio.file.Files.createTempDirectory("ams_state").toString
-    val (b1, b2) = rows.splitAt(60)
-    val stream = MemoryStream[(String, String)]
-    val q = stream.toDS().toDF("lang", "token")
-      .writeStream.outputMode("update")
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        StreamIngest.amsBatchStep(b, stateRoot, id, "lang", "token")
-      }
-      .trigger(Trigger.ProcessingTime(0)).start()
-    stream.addData(b1: _*)
-    q.processAllAvailable()
-    stream.addData(b2: _*)
-    q.processAllAvailable()
-    q.stop()
-    def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getDecimal(2).toString))).toMap
-    def batchEst(data: Seq[(String, String)]) =
-      Sketches.f2Profile(data.toDF("lang", "token"), "lang", "token")
-        .select(col("group"), col("n_rows"), col("est_f2")).collect()
-        .map(r => r.getString(0) -> ((r.getLong(1), r.getDecimal(2).toString))).toMap
-    val folded = asMap(StreamIngest.currentF2Profile(spark, stateRoot))
-    assert(folded === batchEst(rows), "fold must equal the one-pass batch sketch")
-    assert(asMap(StreamIngest.currentF2Profile(spark, stateRoot, uptoBatch = 0L))
-      === batchEst(b1), "as-of batch 0 must equal the batch-1-only sketch")
-    StreamIngest.amsBatchStep(b2.toDF("lang", "token"), stateRoot, 1L, "lang", "token")
-    assert(asMap(StreamIngest.currentF2Profile(spark, stateRoot)) === folded,
-      "replay must be a no-op")
   }
 }

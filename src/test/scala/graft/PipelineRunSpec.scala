@@ -41,4 +41,12 @@ class PipelineRunSpec extends SparkSpec {
       .select("lang").distinct().collect().map(_.getString(0)).toSet
     assert(!langs.contains("en")) // en rows were skipped (committed elsewhere)
   }
+
+  test("runAndWrite: a rerun over committed partitions writes no lineage") {
+    val out = Files.createTempDirectory("kgrun3").toString + "/triples"
+    Pipeline.runAndWrite(spark, sf, out)
+    val r2 = Pipeline.runAndWrite(spark, sf, out)
+    assert(r2.lineageRows == 0)
+    assert(Files.list(java.nio.file.Paths.get(out, "_lineage")).count() == 1)
+  }
 }

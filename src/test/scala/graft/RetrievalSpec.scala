@@ -99,40 +99,6 @@ class RetrievalSpec extends SparkSpec {
     }
   }
 
-  test("streaming postings log: fold == one-pass batch index bit-for-bit, as-of read, exact replay") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.Trigger
-    import graft.streaming.StreamIngest
-    implicit val sq = spark.sqlContext
-    val stateRoot = java.nio.file.Files.createTempDirectory("bm25_state").toString
-    val (b1, b2) = corpus.splitAt(6)
-    val qdf = Seq((100L, "quick fox"), (101L, "the lazy dog")).toDF("query_id", "qtext")
-    val stream = MemoryStream[(Long, String)]
-    val q = stream.toDS().toDF("doc_id", "text")
-      .writeStream.outputMode("update")
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        StreamIngest.postingsBatchStep(b, stateRoot, id)
-      }
-      .trigger(Trigger.ProcessingTime(0)).start()
-    stream.addData(b1: _*)
-    q.processAllAvailable()
-    stream.addData(b2: _*)
-    q.processAllAvailable()
-    q.stop()
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
-        BigInt(r.getDecimal(3).toBigInteger))).toSet
-    def batch(docs: Seq[(Long, String)]) =
-      rows(Retrieval.bm25TopK(docs.toDF("doc_id", "text"), qdf, 4))
-    val folded = rows(StreamIngest.currentBm25TopK(spark, stateRoot, qdf, 4))
-    assert(folded === batch(corpus), "fold must equal the one-pass batch index")
-    assert(rows(StreamIngest.currentBm25TopK(spark, stateRoot, qdf, 4,
-      uptoBatch = 0L)) === batch(b1), "as-of batch 0 must equal the batch-1-only index")
-    // crash replay: re-writing batch 1's delta is a no-op on both logs
-    StreamIngest.postingsBatchStep(b2.toDF("doc_id", "text"), stateRoot, 1L)
-    assert(rows(StreamIngest.currentBm25TopK(spark, stateRoot, qdf, 4)) === folded)
-  }
-
   test("rrfFuse == the sequential fold; consensus beats a single first place; absentees contribute nothing") {
     // query 0: doc 10 is rank 2 in BOTH lists (2·⌊1e6/62⌋ = 32258),
     // doc 11 is rank 1 in list A only (⌊1e6/61⌋ = 16393) — consensus wins

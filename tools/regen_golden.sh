@@ -1,14 +1,13 @@
 #!/bin/bash
 # Regenerate the committed golden-fixture parquet under golden/<sf>/ from the
-# sequential twin (graft.golden.GoldenGen). Run after ANY change that affects
-# pipeline/LSH semantics, then re-run Verify + tools/compare_oracle.py.
+# sequential twin (graft.golden.GoldenGen, on the test classpath). Run after
+# ANY change that affects pipeline/LSH semantics, then re-run Verify +
+# tools/compare_oracle.py.
 set -euo pipefail
 cd "$(dirname "$0")/.."
-sbt -batch package
 for sf in sf0.001 sf0.01 sf0.1; do
   mkdir -p "golden/$sf"
-  /opt/spark/bin/spark-submit --master "local[8]" --driver-memory 12g \
-    --class graft.golden.GoldenGen \
-    target/scala-2.13/neuralnerspark_2.13-0.1.0.jar \
-    "/root/testdata/$sf" "$PWD/golden/$sf" 2>/dev/null | grep '\[golden\]'
+  SPARK_DRIVER_MEM=12g SPARK_GRAFT_CPUS=8 sbt -batch \
+    "Test/runMain graft.golden.GoldenGen /root/testdata/$sf $PWD/golden/$sf" 2>/dev/null \
+    | grep '\[golden\]'
 done
