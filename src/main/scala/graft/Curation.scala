@@ -19,81 +19,122 @@ import graft.ops.{Dedup, TextStats}
  *   7. deterministic SEQUENCE PACKING by token budget (q51)
  *   8. crash-atomic resumable write partitioned by lang (TableIO snapshots)
  *
- * Each surviving stage is localCheckpoint'ed: the stage boundaries are the
- * chain's natural materialization points, stage counts then cost nothing
- * extra, and downstream stages never recompute upstream operators. The
- * whole chain is deterministic — rerunning into the same root writes no
- * new partitions (resumability, tested).
+ * Four localCheckpoint boundaries: read + quality, exact, near-dup, and
+ * decontamination + repetition (a per-row filter rides the boundary next
+ * to it). Each boundary is ONE materializing job that also takes its
+ * stage counts: an `Observation` in the checkpointed plan's result stage,
+ * so a retried task does not count twice, and no `count()` job follows.
+ * Downstream stages never recompute upstream operators. The whole chain
+ * is deterministic — rerunning into the same root writes no new
+ * partitions (resumability, tested).
  */
 object Curation {
+  import org.apache.spark.sql.{Column, Observation}
+  import graft.core.{LineageRow, TableIO}
 
   final case class Report(docsIn: Long, afterQuality: Long, afterExact: Long,
                           afterNearDup: Long, afterDecontam: Long,
                           afterRepetition: Long, langsWritten: Seq[String])
 
+  /** The chain before its write: the curated rows, the stage counts, one
+    * lineage row per count, and the release of what the rows hold on to
+    * (the rarity model's broadcast), for after they are written. */
+  private final case class Chain(out: DataFrame, report: Report,
+                                 lineage: Seq[LineageRow], release: () => Unit)
+
   /** The curated corpus as a DataFrame:
-    * (doc_id, lang, source, n_tokens, lm_logprob, bucket, pack_id, text)
+    * (doc_id, lang, source, text, n_tokens, bucket, pack_id, lm_logprob)
     * with `text` already PII-redacted. Also returns per-stage counts.
     *
-    * Shuffle budget: the per-row stages (quality, repetition, redaction)
-    * are in-place predicate FILTERS — no join against a keep-set, no
-    * shuffle. Only the inherently relational stages join: the two dedups
-    * (hash/LSH aggregations) and decontamination (broadcast benchmark
-    * grams), plus the final rarity/packing annotations (one combine
-    * aggregation and one bucketed window). */
+    * Shuffle budget: the per-row stages (quality, repetition, redaction,
+    * rarity) run on the corpus's own partitions — filters and projections,
+    * no join against a keep-set, no shuffle. Only the inherently
+    * relational stages shuffle: the two dedups (hash/LSH aggregations and
+    * the join of their keep-lists), decontamination (broadcast benchmark
+    * grams; the contaminated ids are dropped by an anti-join, broadcast
+    * while they fit `spark.sql.autoBroadcastJoinThreshold`), and packing
+    * (one bucketed window, which carries the rows). */
   def curatedWithCounts(spark: SparkSession, sfDir: String,
                         budget: Long = 512L): (DataFrame, Report) =
     curatedWithCounts(spark.read.parquet(s"$sfDir/documents.parquet"), budget)
 
   /** DataFrame-input core (the overload above reads the sf dir). */
   def curatedWithCounts(docsIn0: DataFrame, budget: Long): (DataFrame, Report) = {
-    val docs = docsIn0.localCheckpoint()
-    val docsIn = docs.count()
-
-    val quality = docs.filter(TextStats.keepPredicate(col("text"))).localCheckpoint()
-    val nQuality = quality.count()
-
-    val exactKeep = quality.join(
-      Dedup.exact(quality).select(col("keep_id").as("doc_id")), Seq("doc_id"))
-      .localCheckpoint()
-    val nExact = exactKeep.count()
-
-    val nearKeep = exactKeep.join(
-      Dedup.dedupClusters(exactKeep).filter(col("doc_id") === col("keep_id"))
-        .select(col("doc_id")), Seq("doc_id"))
-      .localCheckpoint()
-    val nNear = nearKeep.count()
-
-    // holdout: the stand-in benchmark set (doc_id % 97 == 0, as q53)
-    val benchmark = docs.filter(pmod(col("doc_id"), lit(97)) === 0)
-    val clean = nearKeep.join(
-      Dedup.decontaminate(nearKeep, benchmark, k = 8)
-        .filter(!col("contaminated")).select(col("doc_id")), Seq("doc_id"))
-      .localCheckpoint()
-    val nClean = clean.count()
-
-    val unrepetitive = clean
-      .filter(!TextStats.repetitivePredicate(col("text"))).localCheckpoint()
-    val nUnrep = unrepetitive.count()
-
-    val rarity = TextStats.lmRarity(unrepetitive)
-      .select(col("doc_id"), col("lm_logprob"))
-    val packed = TextStats.packByTokenBudget(unrepetitive, budget)
-      .select(col("doc_id"), col("n_tokens"), col("bucket"), col("pack_id"))
-    val out = unrepetitive
-      .select(col("doc_id"), col("lang"), col("source"),
-        TextStats.redactedText(col("text")).as("text"))
-      .join(packed, Seq("doc_id"))
-      .join(rarity, Seq("doc_id"))
-
-    (out, Report(docsIn, nQuality, nExact, nNear, nClean, nUnrep, Nil))
+    val c = chain(docsIn0, budget)
+    (c.out, c.report)
   }
 
+  private def chain(docs: DataFrame, budget: Long): Chain = {
+    val (quality, docsIn, nQuality, msQuality) =
+      boundary(docs, TextStats.keepPredicate(col("text")))
+
+    val (exactKeep, _, nExact, msExact) = boundary(quality.join(
+      Dedup.exact(quality).select(col("keep_id").as("doc_id")), Seq("doc_id")))
+
+    val (nearKeep, _, nNear, msNear) = boundary(exactKeep.join(
+      Dedup.dedupClusters(exactKeep).filter(col("doc_id") === col("keep_id"))
+        .select(col("doc_id")), Seq("doc_id")))
+
+    // holdout: the stand-in benchmark set (doc_id % 97 == 0, as q53). The
+    // contaminated ids are a subset of nearKeep's, 8 bytes each.
+    val benchmark = docs.filter(pmod(col("doc_id"), lit(97)) === 0)
+    val hits = Dedup.benchmarkHits(nearKeep, benchmark, k = 8).select(col("doc_id"))
+    val broadcastBytes = nearKeep.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val contaminated = if (nNear * 8L <= broadcastBytes) broadcast(hits) else hits
+    val (unrepetitive, nClean, nUnrep, msClean) = boundary(
+      nearKeep.join(contaminated, Seq("doc_id"), "left_anti"),
+      !TextStats.repetitivePredicate(col("text")))
+
+    // rarity, redaction and packing: one projection and one bucket window
+    // over the rows themselves. A doc with no char n-gram has no rarity (no
+    // lmScore row) and is not written; it still counts toward its bucket's
+    // running token sum.
+    val (scored, release) = TextStats.lmAnnotate(unrepetitive, TextStats.lmTrain(unrepetitive))
+    val out = TextStats.packRows(scored.select(col("doc_id"), col("lang"), col("source"),
+        TextStats.redactedText(col("text")).as("text"),
+        TextStats.tokenCount(col("text")).as("n_tokens"),
+        col("n_grams"), col("lm_logprob")), budget)
+      .filter(col("n_grams").isNotNull)
+      .select(col("doc_id"), col("lang"), col("source"), col("text"),
+        col("n_tokens"), col("bucket"), col("pack_id"), col("lm_logprob"))
+
+    def row(stage: String, in: Long, outRows: Long, ms: Long, detail: String = "") =
+      LineageRow(stage, -1, in, outRows, ms, detail)
+    val lineage = Seq(
+      row("read", docsIn, docsIn, 0L, "read in the quality boundary"),
+      row("quality", docsIn, nQuality, msQuality),
+      row("exact", nQuality, nExact, msExact),
+      row("near_dup", nExact, nNear, msNear),
+      row("decontam", nNear, nClean, 0L, "materialized in the repetition boundary"),
+      row("repetition", nClean, nUnrep, msClean))
+    Chain(out, Report(docsIn, nQuality, nExact, nNear, nClean, nUnrep, Nil), lineage, release)
+  }
+
+  /** `df` filtered by `keep` and localCheckpoint'ed in ONE job that also
+    * counts the rows entering and leaving the filter. Returns the rows,
+    * the two counts and the boundary's wall time in ms. */
+  private def boundary(df: DataFrame, keep: Column = lit(true)): (DataFrame, Long, Long, Long) = {
+    val t0 = System.nanoTime()
+    val obs = Observation()
+    val ck = df.withColumn("_keep", keep)
+      .observe(obs, count(lit(1)).as("rows_in"), count_if(col("_keep")).as("rows_out"))
+      .filter(col("_keep")).drop("_keep")
+      .localCheckpoint()
+    val m = obs.get
+    (ck, m("rows_in").asInstanceOf[Long], m("rows_out").asInstanceOf[Long],
+      (System.nanoTime() - t0) / 1000000L)
+  }
+
+  /** Curates `sfDir` into `outRoot` (resumable, partitioned by lang) and,
+    * when the run commits a partition, writes one lineage row per stage
+    * (`_lineage/curation-<n>.json`; partition -1 = the whole stage). A rerun
+    * that commits nothing did no work to record and writes no lineage. */
   def runAndWrite(spark: SparkSession, sfDir: String, outRoot: String,
                   budget: Long = 512L): Report = {
-    val (out, report) = curatedWithCounts(spark, sfDir, budget)
-    val langs = graft.core.TableIO.writeResumable(out, outRoot, "lang")
-    report.copy(langsWritten = langs)
+    val c = chain(spark.read.parquet(s"$sfDir/documents.parquet"), budget)
+    val langs = try TableIO.writeResumable(c.out, outRoot, "lang") finally c.release()
+    if (langs.nonEmpty) TableIO.writeLineage(outRoot, "curation", c.lineage)
+    c.report.copy(langsWritten = langs)
   }
 }
 
@@ -112,12 +153,15 @@ object RunCuration {
     val r = Curation.runAndWrite(spark, sfDir, outRoot, budget)
     val secs = (System.nanoTime() - t0) / 1e9
     val rows = graft.core.TableIO.read(spark, outRoot, "lang").count()
-    println(
-      s"""{"metric":"curation_run","seconds":${f"$secs%.2f"},"docs_in":${r.docsIn},""" +
-      s""""after_quality":${r.afterQuality},"after_exact":${r.afterExact},""" +
-      s""""after_neardup":${r.afterNearDup},"after_decontam":${r.afterDecontam},""" +
-      s""""after_repetition":${r.afterRepetition},"rows_written":$rows,""" +
-      s""""langs":${r.langsWritten.size},"out":"$outRoot"}""")
+    println(summary(r, secs, rows, outRoot))
     spark.stop()
   }
+
+  /** The one-line JSON report `main` prints. */
+  private[graft] def summary(r: Curation.Report, secs: Double, rows: Long, outRoot: String): String =
+    s"""{"metric":"curation_run","seconds":${f"$secs%.2f"},"docs_in":${r.docsIn},""" +
+    s""""after_quality":${r.afterQuality},"after_exact":${r.afterExact},""" +
+    s""""after_neardup":${r.afterNearDup},"after_decontam":${r.afterDecontam},""" +
+    s""""after_repetition":${r.afterRepetition},"rows_written":$rows,""" +
+    s""""langs":${r.langsWritten.size},"out":${graft.core.TableIO.jsonString(outRoot)}}"""
 }

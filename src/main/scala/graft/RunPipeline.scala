@@ -22,11 +22,15 @@ object RunPipeline {
     val report = Pipeline.runAndWrite(spark, sfDir, outRoot, useViterbi)
     val secs = (System.nanoTime() - t0) / 1e9
     val nTriples = graft.core.TableIO.read(spark, outRoot, "lang").count()
-    println(
-      s"""{"metric":"pipeline_run","seconds":${f"$secs%.2f"},"langs":${report.langsWritten.size},""" +
-      s""""lineage_rows":${report.lineageRows},"tokens":${report.tokensSeen},""" +
-      s""""oov":${report.unknownWords},"triples_total":$nTriples,""" +
-      s""""decoder":"${if (useViterbi) "viterbi" else "greedy"}","out":"$outRoot"}""")
+    println(summary(report, secs, nTriples, useViterbi, outRoot))
     spark.stop()
   }
+
+  /** The one-line JSON report `main` prints. */
+  private[graft] def summary(report: Pipeline.RunReport, secs: Double, nTriples: Long,
+                             useViterbi: Boolean, outRoot: String): String =
+    s"""{"metric":"pipeline_run","seconds":${f"$secs%.2f"},"langs":${report.langsWritten.size},""" +
+    s""""lineage_rows":${report.lineageRows},"tokens":${report.tokensSeen},""" +
+    s""""oov":${report.unknownWords},"triples_total":$nTriples,""" +
+    s""""decoder":"${if (useViterbi) "viterbi" else "greedy"}","out":${graft.core.TableIO.jsonString(outRoot)}}"""
 }

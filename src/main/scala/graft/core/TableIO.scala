@@ -63,7 +63,7 @@ object TableIO {
   /** `s` as a JSON string literal: quotes, backslashes and control
     * characters escaped, so any stage name, detail or partition value
     * reads back intact. */
-  private def jsonString(s: String): String = json.writeValueAsString(s)
+  private[graft] def jsonString(s: String): String = json.writeValueAsString(s)
 
   /**
    * Resumable partitioned write of `df` by column `partCol`: skips

@@ -435,6 +435,70 @@ object CharNgrams {
   }
 }
 
+/** lm_gram_score(text string) -> struct<n_grams, freq_sum, mean_logprob>:
+  * the char-n-gram rarity of ONE row against a broadcast gram -> count
+  * table, with no explode and no join. The windows are `char_ngrams`'; a
+  * gram absent from the table counts `floorCount`. `n_grams` counts the
+  * windows, `freq_sum` sums their counts, and `mean_logprob` is the mean of
+  * log(count / tot) summed in window order from 0.0 — what the
+  * explode -> join -> partial `avg(log(...))` plan computes per doc, bit
+  * for bit (`log` is StrictMath's there too, and a ratio <= 0 is null to
+  * both). Null when the text has no window (that plan has no row then). */
+case class LmGramScore(child: Expression,
+                       table: org.apache.spark.broadcast.Broadcast[java.util.HashMap[UTF8String, java.lang.Long]],
+                       n: Int, floorCount: Long, tot: Double) extends UnaryExpression {
+  require(n > 0, "ngram size must be positive")
+  override def dataType: DataType = LmGramScore.schema
+  override def nullable: Boolean = true
+  override def checkInputDataTypes() = {
+    if (child.dataType == StringType) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+      s"lm_gram_score requires string input, got ${child.dataType}")
+  }
+  override def nullSafeEval(v: Any): Any =
+    LmGramScore.compute(v.asInstanceOf[UTF8String], table.value, n, floorCount, tot)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val tRef = ctx.addReferenceObj("lmTable", table, "org.apache.spark.broadcast.Broadcast")
+    val totBits = java.lang.Double.doubleToRawLongBits(tot)
+    nullSafeCodeGen(ctx, ev, c =>
+      s"""${ev.value} = graft.functions.LmGramScore.compute($c,
+         |  (java.util.HashMap) $tRef.value(), $n, ${floorCount}L,
+         |  java.lang.Double.longBitsToDouble(${totBits}L));
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
+  }
+  override protected def withNewChildInternal(newChild: Expression): LmGramScore = copy(child = newChild)
+  override def prettyName: String = "lm_gram_score"
+}
+
+object LmGramScore {
+  import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+  val schema: StructType = StructType(Seq(
+    StructField("n_grams", LongType, nullable = false),
+    StructField("freq_sum", LongType, nullable = false),
+    StructField("mean_logprob", DoubleType, nullable = true)))
+
+  def compute(s: UTF8String, table: java.util.HashMap[UTF8String, java.lang.Long], n: Int,
+              floorCount: Long, tot: Double): org.apache.spark.sql.catalyst.InternalRow = {
+    val grams = CharNgrams.compute(s, n)
+    val k = grams.numElements()
+    if (k == 0) return null
+    var freq = 0L
+    var logSum = 0.0
+    var logs = 0L
+    var i = 0
+    while (i < k) {
+      val c = table.get(grams.getUTF8String(i))
+      val e = if (c == null) floorCount else c.longValue
+      freq = Math.addExact(freq, e)
+      val p = e.toDouble / tot
+      if (!(p <= 0.0)) { logSum += StrictMath.log(p); logs += 1 }
+      i += 1
+    }
+    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](
+      k.toLong, freq, if (logs == 0) null else logSum / logs))
+  }
+}
+
 /** word_ngrams(text string, n) -> array<string>: ALL space-joined n-token
   * windows of `split(text, ' ')` (keep-all split semantics — consecutive
   * spaces yield empty tokens, exactly like the HOF
@@ -993,6 +1057,10 @@ object GraftFunctions {
     Bridge.column(CharNgrams(Bridge.expression(c), n))
   def word_ngrams(c: Column, n: Int): Column =
     Bridge.column(WordNgrams(Bridge.expression(c), n))
+  def lm_gram_score(c: Column,
+                    table: org.apache.spark.broadcast.Broadcast[java.util.HashMap[UTF8String, java.lang.Long]],
+                    n: Int, floorCount: Long, tot: Double): Column =
+    Bridge.column(LmGramScore(Bridge.expression(c), table, n, floorCount, tot))
   def top_ngram_count(c: Column, n: Int): Column =
     Bridge.column(TopNgramCount(Bridge.expression(c), n))
   def excise_positions(toks: Column, removed: Column): Column =

@@ -297,6 +297,19 @@ object Dedup {
    * no corpus shuffle at all.
    */
   def decontaminate(docs: DataFrame, benchmark: DataFrame, k: Int = 8): DataFrame = {
+    val hits = benchmarkHits(docs, benchmark, k)
+    docs.select(col("doc_id"))
+      .join(hits, Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        coalesce(col("n_hits"), lit(0L)).as("n_hits"),
+        (coalesce(col("n_hits"), lit(0L)) > 0).as("contaminated"))
+  }
+
+  /** The contaminated documents alone: (doc_id, n_hits) for each doc of
+    * `docs` sharing at least one k-gram with `benchmark` — `decontaminate`
+    * before its join back onto every doc, for a caller that only needs the
+    * ids to drop. */
+  def benchmarkHits(docs: DataFrame, benchmark: DataFrame, k: Int = 8): DataFrame = {
     val bGrams = benchmark
       .withColumn("toks", split(col("text"), " "))
       .select(explode(shinglesFromTokens(col("toks"), k)).as("g"))
@@ -304,13 +317,8 @@ object Dedup {
     val dGrams = docs
       .withColumn("toks", split(col("text"), " "))
       .select(col("doc_id"), explode(shinglesFromTokens(col("toks"), k)).as("g"))
-    val hits = dGrams.join(broadcast(bGrams), Seq("g"))
+    dGrams.join(broadcast(bGrams), Seq("g"))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hits"))
-    docs.select(col("doc_id"))
-      .join(hits, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-        (coalesce(col("n_hits"), lit(0L)) > 0).as("contaminated"))
   }
 
   /**

@@ -190,8 +190,11 @@ object TextStats {
    * bucket's running sum is an independent partition-local scan.
    */
   def packByTokenBudget(docs: DataFrame, budget: Long, buckets: Int = 64): DataFrame =
-    packByCounts(docs.select(col("doc_id"),
-      size(toks(col("text"))).cast("long").as("n_tokens")), budget, buckets)
+    packByCounts(docs.select(col("doc_id"), tokenCount(col("text")).as("n_tokens")),
+      budget, buckets)
+
+  /** The whitespace token count `packByTokenBudget` budgets. */
+  def tokenCount(text: Column): Column = size(toks(text)).cast("long")
 
   /** Packing over an ARBITRARY per-document token count (doc_id, n_tokens) —
     * so packs can budget the units that matter: BPE subword counts from
@@ -316,7 +319,11 @@ object TextStats {
    * small enough (<= `broadcastRows`), and as a plain shuffle hash join
    * above that — an unconditional broadcast of an unbounded gram table was
    * round 3's scale defect. The explode feeds a partial aggregate in the
-   * same stage; the only corpus shuffle is the per-doc combine.
+   * same stage; the only corpus shuffle is the per-doc combine. That
+   * combine is the price of a result keyed by doc_id: a chain that carries
+   * its documents on and wants these columns on its own rows uses
+   * `lmAnnotate`, which below the same bound scores every row in place
+   * (no explode, no combine, no join back).
    */
   def lmScore(docs: DataFrame, model: DataFrame, n: Int = 3, floorCount: Long = 1L,
               broadcastRows: Long = 4000000L): DataFrame = {
@@ -342,6 +349,48 @@ object TextStats {
         sum(col("ecnt")).as("freq_sum"),
         round(avg(log(col("ecnt").cast("double") / lit(totV))), 6).as("lm_logprob"))
     graft.ops.Dedup.finish(out, m)
+  }
+
+  /**
+   * `lmScore`'s columns (n_grams, freq_sum, lm_logprob) APPENDED to the
+   * rows of `docs`, null on a doc with no char n-gram; on every other doc
+   * equal to `lmScore`'s row, bit for bit.
+   *
+   * Scale shape: one bounded `Adaptive.small` probe of the model decides
+   * and hands its rows over. A model of at most `broadcastRows` rows (the
+   * `lmScore` bound) becomes a broadcast gram map and each row is scored
+   * in place (`lm_gram_score`): one projection, no shuffle, and the rows
+   * keep their partitioning. A larger model is never broadcast: `lmScore`'s
+   * shuffle-hash rows are left-joined back by doc_id.
+   *
+   * Returns the rows and the release of the model broadcast (a no-op
+   * above the bound), to call once the rows are materialized.
+   */
+  def lmAnnotate(docs: DataFrame, model: DataFrame, n: Int = 3, floorCount: Long = 1L,
+                 broadcastRows: Long = 4000000L): (DataFrame, () => Unit) = {
+    import org.apache.spark.unsafe.types.UTF8String
+    val m = model.select(col("gram"), col("cnt").cast("long"), col("tot").cast("double"))
+    graft.core.Adaptive.small(m, broadcastRows) { rows =>
+      val table = new java.util.HashMap[UTF8String, java.lang.Long](rows.length * 2)
+      rows.foreach { r =>
+        if (!r.isNullAt(0) && !r.isNullAt(1)) table.put(UTF8String.fromString(r.getString(0)), r.getLong(1))
+      }
+      // as lmScore: tot is max(tot), 1.0 for an empty model
+      val tots = rows.filterNot(_.isNullAt(2)).map(_.getDouble(2))
+      val tot = if (tots.isEmpty) 1.0 else tots.max
+      val bc = docs.sparkSession.sparkContext.broadcast(table)
+      val s = graft.functions.GraftFunctions.lm_gram_score(col("text"), bc, n, floorCount, tot)
+      val out = docs.withColumn("_lm", s)
+        .select(docs.columns.map(col) ++ Seq(col("_lm.n_grams").as("n_grams"),
+          col("_lm.freq_sum").as("freq_sum"),
+          round(col("_lm.mean_logprob"), 6).as("lm_logprob")): _*)
+      (out, () => bc.unpersist(false))
+    } { checkpointed =>
+      val scored = lmScore(docs, checkpointed, n, floorCount, broadcastRows)
+      val scoreCols = Seq("n_grams", "freq_sum", "lm_logprob")
+      (docs.join(scored, Seq("doc_id"), "left").select((docs.columns ++ scoreCols).map(col): _*),
+        () => ())
+    }
   }
 
   /** CCNet head/middle/tail QUALITY BUCKETING (Wenzek et al. 2020 §4.3):

@@ -1242,4 +1242,37 @@ class OpsSpec extends SparkSpec {
     assert(capped.map(p => (p._1, p._2))
       .subsetOf(exact.map(p => (p._1, p._2))))
   }
+
+  test("lmAnnotate scores rows in place exactly as lmScore's explode/join plan") {
+    val corpus = docs(
+      1L -> "ab",                                   // shorter than n: no gram
+      2L -> "",
+      3L -> "漢字かな交じり文、漢字かな",             // CJK
+      4L -> "𝔘𝔫𝔦 😀😀😀😀 x",                      // supplementary plane
+      5L -> "a😀b",                                 // one gram spanning a surrogate pair
+      6L -> "abcabcabcabc",
+      7L -> "the quick brown fox jumps over the lazy dog")
+    val other = docs((20L to 24L).map(i => i -> "abcab 漢字かな 😀😀 the quick"): _*)
+    val models = Seq(
+      "self" -> TextStats.lmTrain(corpus, n = 3),
+      "floored cross-corpus" -> TextStats.lmTrain(other, n = 3, minCount = 2L))
+    for ((name, model) <- models; broadcastRows <- Seq(4000000L, 0L)) {
+      val want = TextStats.lmScore(corpus, model, n = 3, broadcastRows = broadcastRows)
+        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.get(3)))).toMap
+      val (annotated, release) = TextStats.lmAnnotate(corpus, model, n = 3,
+        broadcastRows = broadcastRows)
+      assert(annotated.columns.toSeq == corpus.columns.toSeq ++
+        Seq("n_grams", "freq_sum", "lm_logprob"), name)
+      val got = annotated.collect().map { r =>
+        val i = corpus.columns.length
+        r.getLong(0) -> (if (r.isNullAt(i)) None
+          else Some((r.getLong(i), r.getLong(i + 1), r.get(i + 2))))
+      }.toMap
+      release()
+      assert(got.keySet == (1L to 7L).toSet, s"$name, $broadcastRows")
+      assert(got.collect { case (id, Some(v)) => id -> v } == want, s"$name, $broadcastRows")
+      assert(got(1L).isEmpty && got(2L).isEmpty && got(5L).map(_._1).contains(1L),
+        s"$name, $broadcastRows: $got")
+    }
+  }
 }
