@@ -4,14 +4,14 @@ import org.apache.spark.sql.SparkSession
 
 /**
  * Production-shaped entry point: spark-submit --class graft.RunPipeline
- * <jar> <sfDir> <outRoot> [viterbi]. Resumable (snapshot manifests), writes
+ * <jar> <sfDir> <outRoot> [greedy|viterbi]. Resumable (snapshot manifests), writes
  * per-partition lineage, prints a one-line JSON report.
  */
 object RunPipeline {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: RunPipeline <sfDir> <outRoot> [viterbi]")
+    require(args.length >= 2, "usage: RunPipeline <sfDir> <outRoot> [greedy|viterbi]")
     val Array(sfDir, outRoot) = args.take(2)
-    val useViterbi = args.length > 2 && args(2) == "viterbi"
+    val useViterbi = viterbi(args)
     val spark = SparkSession.builder()
       .appName("graft-kg-pipeline")
       .config("spark.sql.adaptive.enabled", "true")
@@ -24,6 +24,16 @@ object RunPipeline {
     val nTriples = graft.core.TableIO.read(spark, outRoot, "lang").count()
     println(summary(report, secs, nTriples, useViterbi, outRoot))
     spark.stop()
+  }
+
+  /** Whether the optional third argument selects the Viterbi decoder:
+    * absent or `greedy` is greedy, `viterbi` is Viterbi, anything else is
+    * rejected rather than silently decoded greedily. */
+  private[graft] def viterbi(args: Array[String]): Boolean = args.lift(2) match {
+    case None | Some("greedy") => false
+    case Some("viterbi") => true
+    case Some(other) =>
+      throw new IllegalArgumentException(s"unknown decoder '$other': use greedy or viterbi")
   }
 
   /** The one-line JSON report `main` prints. */

@@ -87,7 +87,6 @@ object TableIO {
    * then deletes what it wrote, commits nothing and throws.
    */
   def writeResumable(df: DataFrame, root: String, partCol: String): Seq[String] = {
-    recoverCompactLeftovers(root)
     val done = completedPartitions(root)
     uncommittedDirs(root, partCol, done).foreach { case (dir, _) => deleteRecursively(dir) }
     // nulls stay in, so that their default-partition directory fails below
@@ -125,30 +124,6 @@ object TableIO {
     }
   }
 
-  /**
-   * Heal leftovers of a compact() interrupted inside its two-rename swap
-   * window: a `.compact-<dir>.old` with the real dir ABSENT means the crash
-   * hit between the renames — the original partition is restored; with the
-   * real dir present the rewrite landed and the stale `.old` is deleted.
-   * Orphan `.compact-*.tmp` dirs (crash mid-rewrite) are deleted. Called on
-   * every read/write/compact entry point, so no reader path ever depends on
-   * a partition stranded in a hidden dir.
-   */
-  private def recoverCompactLeftovers(root: String): Unit = {
-    val data = Paths.get(root, "data")
-    if (!Files.isDirectory(data)) return
-    val leftovers = Using.resource(Files.list(data))(_.iterator().asScala.toList)
-      .filter(_.getFileName.toString.startsWith(".compact-"))
-    leftovers.foreach { p =>
-      val name = p.getFileName.toString
-      if (name.endsWith(".old")) {
-        val real = data.resolve(name.stripPrefix(".compact-").stripSuffix(".old"))
-        if (!Files.exists(real)) Files.move(p, real)
-        else deleteRecursively(p)
-      } else if (name.endsWith(".tmp")) deleteRecursively(p)
-    }
-  }
-
   /** Persist lineage rows (from the stage accumulators) alongside the data. */
   def writeLineage(root: String, stage: String, rows: Seq[LineageRow]): Unit = {
     val d = Paths.get(root, "_lineage")
@@ -162,25 +137,23 @@ object TableIO {
   }
 
   /** Read back the data written by writeResumable. */
-  def read(spark: SparkSession, root: String): DataFrame = {
-    recoverCompactLeftovers(root)
+  def read(spark: SparkSession, root: String): DataFrame =
     spark.read.parquet(s"$root/data")
-  }
 
   /** Snapshot-consistent read: only partitions recorded in a committed
     * snapshot are visible (partition pruning keeps this a metadata filter —
     * uncommitted leftover directories are never scanned). */
   def read(spark: SparkSession, root: String, partCol: String): DataFrame = {
-    recoverCompactLeftovers(root)
     val done = completedPartitions(root).toSeq.sorted
     spark.read.parquet(s"$root/data").filter(col(partCol).isInCollection(done))
   }
 
   /** TIME TRAVEL (the Iceberg `VERSION AS OF` analog): read the table as of
     * snapshot `snapshotId` — only partitions that snapshot had committed are
-    * visible. Snapshots are cumulative, so this is one metadata filter. */
+    * visible. Snapshots are cumulative, so this is one metadata filter.
+    * Kept without a main caller: snapshot reads are the Iceberg semantics
+    * this layer stands in for. */
   def readAt(spark: SparkSession, root: String, partCol: String, snapshotId: Int): DataFrame = {
-    recoverCompactLeftovers(root)
     val snap = listSnapshots(root).find(_.id == snapshotId)
       .getOrElse(throw new IllegalArgumentException(
         s"no snapshot $snapshotId under $root (have ${listSnapshots(root).map(_.id)})"))
@@ -189,82 +162,12 @@ object TableIO {
   }
 
   /**
-   * Small-file COMPACTION (the Iceberg rewrite_data_files analog) — the
-   * 100 TB housekeeping a long-lived partitioned sink needs: every
-   * committed partition whose file count exceeds `maxFilesPerPartition` is
-   * rewritten to `targetFiles` files via a temp-dir + rename swap, then a
-   * new snapshot is committed. Row content is untouched. Returns the
-   * partition values rewritten.
-   *
-   * Atomicity: the swap is TWO renames (dir -> .old, tmp -> dir), so there
-   * is a crash/concurrency window in which the partition directory is
-   * briefly absent. A crash inside the window is healed on the next
-   * read/write/compact call (`recoverCompactLeftovers` restores the .old
-   * dir); a CONCURRENT reader listing root/data at that exact instant can
-   * still observe the partition as missing — run compaction when no reader
-   * races the same table (single-writer maintenance, the Iceberg
-   * rewrite_data_files operational contract).
-   */
-  def compact(spark: SparkSession, root: String, partCol: String,
-              maxFilesPerPartition: Int = 8, targetFiles: Int = 1): Seq[String] = {
-    recoverCompactLeftovers(root)
-    val done = completedPartitions(root).toSeq.sorted
-    val rewritten = done.filter { v =>
-      val dir = Paths.get(root, "data", s"$partCol=${ExternalCatalogUtils.escapePathName(v)}")
-      Files.isDirectory(dir) && {
-        val nFiles = Using.resource(Files.list(dir))(_.iterator().asScala
-          .count(_.getFileName.toString.endsWith(".parquet")))
-        nFiles > maxFilesPerPartition
-      }
-    }
-    rewritten.foreach { v =>
-      val dirName = s"$partCol=${ExternalCatalogUtils.escapePathName(v)}"
-      val dir = Paths.get(root, "data", dirName)
-      val tmp = Paths.get(root, "data", s".compact-$dirName.tmp")
-      deleteRecursively(tmp)
-      spark.read.parquet(dir.toString)
-        .repartition(targetFiles)
-        .write.mode("overwrite").parquet(tmp.toString)
-      // swap: the old dir vanishes only after the rewrite fully landed
-      val old = Paths.get(root, "data", s".compact-$dirName.old")
-      deleteRecursively(old)
-      Files.move(dir, old)
-      Files.move(tmp, dir)
-      deleteRecursively(old)
-    }
-    if (rewritten.nonEmpty) commitSnapshot(root, rewritten)
-    rewritten
-  }
-
-  /**
-   * SNAPSHOT EXPIRY (the Iceberg `expire_snapshots` analog — the
-   * metadata-retention half of housekeeping, next to [[compact]]'s
-   * data-file half): drop all but the most recent `keepLast` snapshot
-   * manifests. Data files are untouched — snapshots here are CUMULATIVE
-   * partition manifests, so the live read path and every surviving
-   * snapshot still resolve; only TIME TRAVEL to an expired id dies, and
-   * it dies LOUDLY ([[readAt]] already throws on unknown ids, listing
-   * what remains). Snapshot numbering continues from the surviving
-   * maximum, so a concurrent-free expire never collides with the next
-   * commit. Single-writer maintenance window, the [[compact]] contract.
-   *
-   * @return the expired snapshot ids
-   */
-  def expireSnapshots(root: String, keepLast: Int = 3): Seq[Int] = {
-    require(keepLast >= 1, "must keep at least the latest snapshot")
-    val snaps = listSnapshots(root).sortBy(_.id)
-    val expire = snaps.dropRight(keepLast)
-    expire.foreach(s =>
-      Files.deleteIfExists(snapDir(root).resolve(s"snapshot-${s.id}.json")))
-    expire.map(_.id)
-  }
-
-  /**
    * Bucketed + sorted catalog table (K6's bucketing contract): downstream
    * equi-joins on `bucketCol` between tables bucketed the same way need no
    * shuffle at all — Catalyst sees the hash-partitioned layout and plans a
    * SortMergeJoin without Exchange (plan-tested in PlanSpec). This is the
-   * parquet stand-in for an Iceberg bucket transform.
+   * parquet stand-in for an Iceberg bucket transform. Kept without a main
+   * caller: triples bucketed by canonical-entity hash are this layout.
    */
   def writeBucketed(df: DataFrame, tableName: String, buckets: Int,
                     bucketCol: String, sortCol: String): Unit = {
@@ -273,58 +176,5 @@ object TableIO {
       .sortBy(sortCol)
       .format("parquet")
       .saveAsTable(tableName)
-  }
-
-  /**
-   * Z-ORDER CLUSTERED write (the Delta/Iceberg `OPTIMIZE ZORDER BY`
-   * analog): lay the table out along the Morton space-filling curve of
-   * TWO integral columns so per-file min/max footers prune
-   * MULTI-dimensional predicates — a single-column sort makes one
-   * predicate file-prunable and leaves every file spanning the other
-   * column's full range; the interleaved order keeps rows close in BOTH
-   * dimensions close in file order (ClusterSpec measures it: a
-   * one-dimension-selective box query intersects a fraction of the
-   * z-ordered files vs ALL of the linearly-sorted ones).
-   *
-   * Each column maps to a bounded bucket index by exact integer
-   * min/max normalization — `(x − min)·(buckets−1) div (max − min)` in
-   * decimal(38,0) (overflow-proof for any Long range; constant columns
-   * collapse to bucket 0) — then the codegen'd
-   * [[graft.functions.ZOrder2]] interleaves the two indices and the
-   * frame range-partitions + sorts on that key. At 100 TB this is the
-   * compaction-time rewrite (one shuffle, the same cost class as
-   * [[compact]]); production systems replace min/max normalization with
-   * range-partition ids when the value distribution is heavily skewed —
-   * same curve, different bucketing.
-   */
-  def clusterBy(df: DataFrame, colA: String, colB: String, outPath: String,
-                nFiles: Int, buckets: Long = 1L << 16): Unit = {
-    // buckets <= 2^31: two 31-bit indices interleave into a <= 62-bit
-    // Morton key, so the sort key can never go negative (a 2^32 bucket
-    // could set bit 63 and break curve monotonicity)
-    require(nFiles >= 1 && buckets >= 2 && buckets <= (1L << 31),
-      "need nFiles >= 1 and 2 <= buckets <= 2^31")
-    val mm = df.agg(min(col(colA)).cast("long"), max(col(colA)).cast("long"),
-      min(col(colB)).cast("long"), max(col(colB)).cast("long")).head()
-    if (mm.isNullAt(0)) { // empty input: write the empty frame as-is
-      df.write.mode("overwrite").parquet(outPath)
-      return
-    }
-    def bucketOf(c: String, mn: Long, mx: Long) =
-      if (mx == mn) lit(0L)
-      // divisor in decimal SQL, not driver Long arithmetic: mx - mn
-      // overflows Long when the column spans more than half the Long range
-      // (e.g. min = -2, max = Long.MaxValue), which silently produced
-      // garbage bucket ids — decimal(38,0) keeps the range exact
-      else expr(s"CAST((CAST($c AS DECIMAL(38,0)) - $mn) * ${buckets - 1} " +
-        s"AS DECIMAL(38,0)) div (CAST($mx AS DECIMAL(38,0)) - ($mn))")
-    val z = graft.functions.GraftFunctions.zorder2(
-      bucketOf(colA, mm.getLong(0), mm.getLong(1)),
-      bucketOf(colB, mm.getLong(2), mm.getLong(3)))
-    df.withColumn("__z", z)
-      .repartitionByRange(nFiles, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-      .write.mode("overwrite").parquet(outPath)
   }
 }

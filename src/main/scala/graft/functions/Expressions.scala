@@ -53,45 +53,6 @@ case class Fingerprint64(child: Expression) extends UnaryExpression {
   override def prettyName: String = "fingerprint64"
 }
 
-/** zorder2(a bigint, b bigint) -> bigint: the 64-bit Morton code
-  * interleaving the LOW 32 bits of each operand (bit 2j+1 = a's bit j,
-  * bit 2j = b's bit j) — the space-filling-curve key behind
-  * multi-dimensional data CLUSTERING (Delta/Iceberg OPTIMIZE ZORDER):
-  * sorting by the interleaved key keeps rows close in BOTH dimensions
-  * close in the file order, so per-file min/max footers prune
-  * multi-predicate scans that a single-column sort can never help.
-  * Operands are expected to be bounded bucket indices (see
-  * [[graft.core.TableIO.clusterBy]]); codegen'd static loop. */
-case class ZOrder2(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes() = (left.dataType, right.dataType) match {
-    case (LongType, LongType) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case (l, r) => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"zorder2 requires (bigint, bigint), got ($l, $r)")
-  }
-  override def nullSafeEval(a: Any, b: Any): Any =
-    ZOrder2.compute(a.asInstanceOf[Long], b.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.ZOrder2.compute($a, $b)")
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): ZOrder2 =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "zorder2"
-}
-
-object ZOrder2 {
-  def compute(a: Long, b: Long): Long = {
-    var z = 0L
-    var j = 31
-    while (j >= 0) {
-      z = (z << 2) | (((a >>> j) & 1L) << 1) | ((b >>> j) & 1L)
-      j -= 1
-    }
-    z
-  }
-}
-
 /** deflate_len(text string) -> bigint: compressed size of the UTF-8 bytes
   * under DEFLATE level 6, raw (nowrap) — the Gopher-family compression-
   * ratio quality signal (repetitive/templated text compresses far below
@@ -1081,8 +1042,6 @@ object GraftFunctions {
     Bridge.column(PqSum(Bridge.expression(code), Bridge.expression(table)))
   def deflate_len(c: Column): Column =
     Bridge.column(DeflateLen(Bridge.expression(c)))
-  def zorder2(a: Column, b: Column): Column =
-    Bridge.column(ZOrder2(Bridge.expression(a), Bridge.expression(b)))
 
   /** Register for SQL use in an existing session. */
   def register(spark: SparkSession): Unit = {

@@ -3,6 +3,7 @@ package graft.kg
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.Adaptive
+import graft.ops.Dedup
 
 /**
  * Structural analytics over the materialized knowledge graph: triangle
@@ -20,12 +21,6 @@ import graft.core.Adaptive
  * are integer cross-multiplications, never a double division.
  */
 object Graphs {
-
-  /** Last hub-drop report per label (witness values whose co-neighbor
-    * list exceeded the cap), populated synchronously before the operator
-    * returns — the [[graft.ops.Dedup.lastDropReport]] convention. */
-  val lastDropReport: scala.collection.concurrent.TrieMap[String, (Long, Long)] =
-    scala.collection.concurrent.TrieMap.empty
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
@@ -340,24 +335,15 @@ object Graphs {
       .select(col("i").as("a"), col("j").as("b"))
   }
 
-  /** Symmetric neighbor relation of the simple undirected graph:
-    * (node: long, w: long) — one row per direction of each edge. Feed to
-    * [[mergeCandidates]] for graph-context overlap. */
-  def neighborSets(edgesIn: DataFrame): DataFrame = {
-    val e = undirected(edgesIn)
-    e.select(col("a").as("node"), col("b").as("w"))
-      .unionAll(e.select(col("b").as("node"), col("a").as("w")))
-  }
-
   /**
    * Duplicate-entity candidates by feature-set overlap: unordered node
    * pairs (a < b) whose witness sets have Jaccard similarity >=
    * tauNum/tauDen, reported as exact integers (common, union_size) — the
    * canonicalization reviewer's "these two canonical entities share most
    * of their context, consider merging" feed. The witness relation is
-   * caller-chosen: [[neighborSets]] for graph-context overlap, or an
-   * occurrence relation like (entity, url) for "mentioned by the same
-   * pages" (the board query q86's shape).
+   * caller-chosen: an occurrence relation like (entity, url) for
+   * "mentioned by the same pages" (the board query q86's shape), or the
+   * graph's own symmetric neighbor relation for graph-context overlap.
    *
    * Shape: pairs are generated ONLY through shared witnesses (a blocked
    * self-join of the occurrence list on the witness — never an all-pairs
@@ -370,7 +356,7 @@ object Graphs {
    * rows, so one celebrity witness (a hub entity, a portal url) can
    * dominate the join. `maxWitnessDegree` caps it: witnesses above the
    * cap are EXCLUDED from pair generation and reported LOUDLY (log +
-   * [[lastDropReport]]("merge_candidates")), making `common` a
+   * [[Dedup.lastDropReport]]("merge_candidates")), making `common` a
    * documented lower bound in capped runs — the same loud-bounded
    * contract as the LSH hot-bucket cap. The default (Long.MaxValue) is
    * exact and skips the sizing pass entirely.
@@ -389,7 +375,7 @@ object Graphs {
       val dropped = wdeg.filter(col("wd") > maxWitnessDegree)
         .agg(coalesce(count(lit(1)), lit(0L)).as("n"),
           coalesce(sum(col("wd")), lit(0L)).as("slots")).head()
-      lastDropReport("merge_candidates") = (dropped.getLong(0), dropped.getLong(1))
+      Dedup.lastDropReport("merge_candidates") = (dropped.getLong(0), dropped.getLong(1))
       if (dropped.getLong(0) > 0)
         log.warn(s"[merge_candidates] excluded ${dropped.getLong(0)} hub witnesses " +
           s"covering ${dropped.getLong(1)} neighbor slots (cap=$maxWitnessDegree); " +
@@ -433,7 +419,7 @@ object Graphs {
    *
    * 100 TB skew: a hub intermediary with degree d emits d² candidate
    * pairs; `maxNeighborDegree` excludes hub witnesses from pair
-   * generation LOUDLY ([[lastDropReport]]("link_prediction") + log, the
+   * generation LOUDLY ([[Dedup.lastDropReport]]("link_prediction") + log, the
    * [[mergeCandidates]] contract). Celebrities stop minting candidate
    * pairs — exactly the pairs common-neighbor evidence is weakest for.
    *
@@ -452,7 +438,7 @@ object Graphs {
       val dropped = wdeg.filter(col("wd") > maxNeighborDegree)
         .agg(coalesce(count(lit(1)), lit(0L)).as("n"),
           coalesce(sum(col("wd")), lit(0L)).as("slots")).head()
-      lastDropReport("link_prediction") = (dropped.getLong(0), dropped.getLong(1))
+      Dedup.lastDropReport("link_prediction") = (dropped.getLong(0), dropped.getLong(1))
       if (dropped.getLong(0) > 0)
         log.warn(s"[link_prediction] excluded ${dropped.getLong(0)} hub " +
           s"intermediaries covering ${dropped.getLong(1)} neighbor slots " +
@@ -637,7 +623,7 @@ object Graphs {
    * entities emits d² pair rows — bounded naturally when contexts are
    * sentences, and hard-bounded by `maxContextDegree` for page-level
    * contexts (hub contexts are EXCLUDED and reported loudly via
-   * [[lastDropReport]]("pmi_edges"), the merge-candidates contract;
+   * [[Dedup.lastDropReport]]("pmi_edges"), the merge-candidates contract;
    * n_ab becomes a documented lower bound in capped runs).
    *
    * @param mentionsIn (ctx: any equatable type, node: castable to long);
@@ -656,7 +642,7 @@ object Graphs {
       val dropped = cdeg.filter(col("cd") > maxContextDegree)
         .agg(coalesce(count(lit(1)), lit(0L)).as("n"),
           coalesce(sum(col("cd")), lit(0L)).as("slots")).head()
-      lastDropReport("pmi_edges") = (dropped.getLong(0), dropped.getLong(1))
+      Dedup.lastDropReport("pmi_edges") = (dropped.getLong(0), dropped.getLong(1))
       if (dropped.getLong(0) > 0)
         log.warn(s"[pmi_edges] excluded ${dropped.getLong(0)} hub contexts " +
           s"covering ${dropped.getLong(1)} mention slots (cap=$maxContextDegree); " +
@@ -2978,7 +2964,7 @@ object Graphs {
    * partial-aggregated count row per co-incident pair, never a deg^2
    * fan-out. A left vertex above `maxLeftDegree` (a crawl artifact — a
    * page "mentioning" 10^5 entities) is excluded LOUDLY via
-   * [[lastDropReport]] (key "butterflies"), the Dedup hot-bucket
+   * [[Dedup.lastDropReport]] (key "butterflies"), the Dedup hot-bucket
    * convention: the cap is the explicit knob, not a silent truncation.
    * Butterfly counts themselves accumulate in decimal(38,0) — C(w,2)
    * overflows Long once a pair co-occurs on ~4.3e9 pages (the
@@ -3003,7 +2989,7 @@ object Graphs {
     val hot = ldeg.filter(col("ldeg") > maxLeftDegree)
       .agg(count(lit(1)).as("n"), coalesce(max(col("ldeg")), lit(0L)).as("worst"))
       .head()
-    lastDropReport.put("butterflies", (hot.getLong(0), hot.getLong(1)))
+    Dedup.lastDropReport.put("butterflies", (hot.getLong(0), hot.getLong(1)))
     if (hot.getLong(0) > 0)
       log.warn(s"butterflies: DROPPED ${hot.getLong(0)} left vertices above " +
         s"maxLeftDegree=$maxLeftDegree (worst degree ${hot.getLong(1)}) — " +

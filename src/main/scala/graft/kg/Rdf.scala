@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
  * by `25` or an encoder escape code, so no false decode match exists).
  * Rows carrying CONTROL characters (u0000-u001F, u007F) in either
  * position are N-Quads-unrepresentable without lossy mangling: they are
- * EXCLUDED and reported loudly ([[Graphs.lastDropReport]]("nquads"), the
- * shared convention) — quarantine, never silently corrupt.
+ * EXCLUDED and reported loudly ([[graft.ops.Dedup.lastDropReport]]
+ * ("nquads"), the shared convention) — quarantine, never silently corrupt.
  *
  * Scale shape: serialization is a pure per-row projection (zero shuffle,
  * whole-stage codegen'd string ops); parsing is one regexp_extract pass.
@@ -54,7 +54,7 @@ object Rdf {
     val bad = in.filter(col("pred").rlike(ControlChars) ||
       col("url").rlike(ControlChars))
     val nBad = bad.count()
-    Graphs.lastDropReport("nquads") = (nBad, nBad)
+    graft.ops.Dedup.lastDropReport("nquads") = (nBad, nBad)
     if (nBad > 0)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"[nquads] excluded $nBad statements with control characters in " +

@@ -201,7 +201,7 @@ object Triples {
    * explosion risk is a hub mid-entity (a country, a year): z
    * contributes in_deg(z) × out_deg(z) body rows, so `maxMidFanout`
    * bounds that product; hubs above it are EXCLUDED from body
-   * generation and reported loudly ([[Graphs.lastDropReport]]
+   * generation and reported loudly ([[graft.ops.Dedup.lastDropReport]]
    * ("rule_mining"), the shared convention), making support a documented
    * lower bound in capped runs.
    *
@@ -230,7 +230,7 @@ object Triples {
             lit(java.math.BigDecimal.ZERO)).as("slots")).head()
       val (nDrop, slots) =
         (dropped.getLong(0), dropped.getDecimal(1).longValueExact())
-      Graphs.lastDropReport("rule_mining") = (nDrop, slots)
+      graft.ops.Dedup.lastDropReport("rule_mining") = (nDrop, slots)
       if (nDrop > 0)
         org.slf4j.LoggerFactory.getLogger(getClass).warn(
           s"[rule_mining] excluded $nDrop hub mid-entities covering $slots " +

@@ -3,6 +3,7 @@ package graft.link
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.Dedup
 
 /**
  * Blocking strategies for entity resolution beyond the alias-equality join
@@ -61,11 +62,6 @@ object Blocking {
         (col("rank2") - col("rank")).as("dist"))
   }
 
-  /** Last hot-gram drop report per label — the shared loud-drop
-    * convention (`ops.Dedup.lastDropReport`). */
-  val lastDropReport: scala.collection.concurrent.TrieMap[String, (Long, Long)] =
-    scala.collection.concurrent.TrieMap.empty
-
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /**
@@ -86,7 +82,7 @@ object Blocking {
    * before verification; the exact array intersection runs on surviving
    * candidates only. A prefix gram whose posting list still exceeds
    * `maxGramPostings` on either side is dropped LOUDLY
-   * (`lastDropReport("fuzzyJoin")`) — with zero drops the result is
+   * (`Dedup.lastDropReport("fuzzyJoin")`) — with zero drops the result is
    * exact.
    *
    * Plan: one gram-frequency agg over the union, one per-string window
@@ -163,7 +159,7 @@ object Blocking {
     val dropRow = postings.filter(col("psz") > maxGramPostings)
       .agg(count(lit(1)).as("n"), coalesce(sum(col("psz")), lit(0L)).as("sl"))
       .head()
-    lastDropReport("fuzzyJoin") = (dropRow.getLong(0), dropRow.getLong(1))
+    Dedup.lastDropReport("fuzzyJoin") = (dropRow.getLong(0), dropRow.getLong(1))
     if (dropRow.getLong(0) > 0)
       log.warn(s"[fuzzyJoin] dropped ${dropRow.getLong(0)} hot prefix " +
         s"gram posting list(s) covering ${dropRow.getLong(1)} slots " +

@@ -151,7 +151,9 @@ object Dedup {
 
   /** Last drop report per label — observable from tests/metrics. Populated
     * synchronously before the operator returns (eager mode, the default);
-    * lazy plan-audit mode does not update it. */
+    * lazy plan-audit mode does not update it. The engine's one drop store:
+    * every loud cap (Dedup, Multimodal, Graphs, Rdf, Triples, Blocking)
+    * records here under its own label. */
   val lastDropReport: scala.collection.concurrent.TrieMap[String, (Long, Long)] =
     scala.collection.concurrent.TrieMap.empty
 
@@ -257,22 +259,14 @@ object Dedup {
    * least one OTHER document. Docs shorter than k tokens report (0, 0).
    *
    * Plan: one window explode, one groupBy(window) counting DISTINCT owner
-   * docs (map-side partial agg), one join back, one per-doc agg.
-   *
-   * `hashKeys = true` is the 100 TB path: both shuffles key on
-   * xxhash64(window) — 8 bytes instead of the ~10-token window text, an
-   * order-of-magnitude shuffle-volume cut (the `exact` vs `exactByText`
-   * trade). A 64-bit collision can only OVER-count a dup window (two
-   * different windows colliding), which at curation thresholds is noise;
-   * the text form (default) is exact and oracle-checkable, and the two are
-   * equality-tested at test scale.
+   * docs (map-side partial agg), one join back, one per-doc agg. Both
+   * shuffles key on the exact window text, so the count is
+   * oracle-checkable.
    */
-  def dupSpans(docs: DataFrame, k: Int = 10, hashKeys: Boolean = false): DataFrame = {
-    val winKey = if (hashKeys) xxhash64(col("win0")) else col("win0")
+  def dupSpans(docs: DataFrame, k: Int = 10): DataFrame = {
     val wins = docs
       .withColumn("toks", split(col("text"), " "))
-      .select(col("doc_id"), explode(shinglesFromTokens(col("toks"), k)).as("win0"))
-      .select(col("doc_id"), winKey.as("win"))
+      .select(col("doc_id"), explode(shinglesFromTokens(col("toks"), k)).as("win"))
     val owners = wins.groupBy(col("win"))
       .agg(countDistinct(col("doc_id")).as("nd"))
     val perDoc = wins.join(owners, Seq("win"))
@@ -342,19 +336,10 @@ object Dedup {
    * Returns (doc_id, n_tokens, n_removed, text_clean). Deterministic
    * (min-struct keeper, set semantics). Shuffles: one window-value
    * aggregation, one per-doc position collect, one join back to the corpus.
-   *
-   * `hashKeys = true` is the 100 TB path (the `dupSpans` trade): the
-   * keeper aggregation keys on xxhash64(window) — 8 bytes instead of k
-   * tokens of text. A 64-bit collision can only OVER-remove (two distinct
-   * windows merging into one keeper group); the text form (default) is
-   * exact and golden-oracled, and the two are equality-tested at test
-   * scale.
    */
-  def removeDupSpans(docs: DataFrame, k: Int = 10,
-                     hashKeys: Boolean = false): DataFrame = {
+  def removeDupSpans(docs: DataFrame, k: Int = 10): DataFrame = {
     val sep = "\u0001"
     val toks = split(col("text"), " ")
-    val winKey = if (hashKeys) xxhash64(col("win0")) else col("win0")
     val wins = docs
       .withColumn("toks", toks)
       .withColumn("nt", size(col("toks")))
@@ -363,8 +348,7 @@ object Dedup {
           when(col("nt") >= k,
             transform(sequence(lit(1), col("nt") - (k - 1)),
               i => concat_ws(sep, slice(col("toks"), i, lit(k)))))
-            .otherwise(array().cast("array<string>"))).as(Seq("pos", "win0")))
-      .select(col("doc_id"), col("nt"), col("pos"), winKey.as("win"))
+            .otherwise(array().cast("array<string>"))).as(Seq("pos", "win")))
     val keepers = wins.groupBy(col("win"))
       .agg(min(struct(col("doc_id"), col("pos"))).as("keep"),
         count(lit(1)).as("occ"))
@@ -412,11 +396,8 @@ object Dedup {
    * (order = (doc_id, position)), excise the rest, and reassemble.
    * Returns (doc_id, n_paras, n_dropped, text_clean) for every input doc.
    *
-   * 100 TB shape (`hashKeys = true`): the keeper aggregation keys on
-   * xxhash64(paragraph) — the corpus text never rides the dedup shuffle,
-   * only 8-byte keys + (doc_id, pos); a 64-bit collision can only
-   * OVER-drop (two distinct paragraphs sharing a keeper), and the two
-   * modes are equality-tested at test scale. The drop-list join back to
+   * Scale shape: the keeper aggregation keys on the exact paragraph text
+   * with a map-side min-struct combine. The drop-list join back to
    * the corpus is keyed by doc_id and carries only int positions for the
    * (typically small) subset of docs that lose a paragraph — untouched
    * docs pass through the left join with their text unshuffled, and a
@@ -425,12 +406,10 @@ object Dedup {
    * reuses the sorted-merge `excise_positions` expression (O(paras +
    * dropped) per doc).
    */
-  def dedupParagraphs(docs: DataFrame, hashKeys: Boolean = false): DataFrame = {
+  def dedupParagraphs(docs: DataFrame): DataFrame = {
     val paras = split(col("text"), "\n")
-    val pKey = if (hashKeys) xxhash64(col("p0")) else col("p0")
     val ex = docs
-      .select(col("doc_id"), posexplode(paras).as(Seq("pos", "p0")))
-      .select(col("doc_id"), col("pos"), pKey.as("p"))
+      .select(col("doc_id"), posexplode(paras).as(Seq("pos", "p")))
     val keepers = ex.groupBy(col("p"))
       .agg(min(struct(col("doc_id"), col("pos"))).as("keep"),
         count(lit(1)).as("occ"))
@@ -482,19 +461,14 @@ object Dedup {
    * 100 TB shape: the election is two partial-aggregated shuffles keyed by
    * (source, paragraph) — a distinct to collapse within-doc repeats to one
    * vote, then a count — so a footer on 10^9 pages of one host costs
-   * counters, never a member list; `hashKeys = true` keys both shuffles on
-   * xxhash64(paragraph) (8 bytes rides, not the text; a 64-bit collision
-   * can only OVER-strip, and the two modes are equality-tested). The strip
-   * join back to the corpus is keyed by doc_id and carries int positions;
-   * excision is the sorted-merge `excise_positions` (O(paras + removed)).
+   * counters, never a member list. The strip join back to the corpus is
+   * keyed by doc_id and carries int positions; excision is the
+   * sorted-merge `excise_positions` (O(paras + removed)).
    */
-  def stripBoilerplate(docs: DataFrame, minDocs: Long = 3L,
-                       hashKeys: Boolean = false): DataFrame = {
+  def stripBoilerplate(docs: DataFrame, minDocs: Long = 3L): DataFrame = {
     val paras = split(col("text"), "\n")
-    val pKey = if (hashKeys) xxhash64(col("p0")) else col("p0")
     val ex = docs
-      .select(col("doc_id"), col("source"), posexplode(paras).as(Seq("pos", "p0")))
-      .select(col("doc_id"), col("source"), col("pos"), pKey.as("p"))
+      .select(col("doc_id"), col("source"), posexplode(paras).as(Seq("pos", "p")))
     val boiler = ex.select(col("source"), col("p"), col("doc_id")).distinct()
       .groupBy(col("source"), col("p"))
       .agg(count(lit(1)).as("nd"))

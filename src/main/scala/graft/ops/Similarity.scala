@@ -932,9 +932,7 @@ object Similarity {
       round(cosine(a, b) * lit(1e9)).cast("long")
     // NO spread here: the exhaustive path is the oracle configuration
     // over eval-set-sized X/Y, where the broadcast-side work is smaller
-    // than the exchange it would add (measured +0.9 s at sf0.1);
-    // corpus-scale margin mining goes through [[marginPairsIvf]], whose
-    // candidate scans DO spread their corpus sides
+    // than the exchange it would add (measured +0.9 s at sf0.1)
     val x = emb.filter(leftFilter)
       .select(col("vec_id").as("x_id"), col("embedding").as("xv"))
     val y = emb.filter(rightFilter)
@@ -969,11 +967,9 @@ object Similarity {
    * keeps the division on positives, where Spark's truncating div and
    * the oracle's floor division agree) and a positive denominator;
    * margin_permille = (2·kx·ky·c·scale) div (Σx·ky + Σy·kx); forward
-   * "max" keeps each x's best-margin y. Callers: [[marginPairs]]
-   * (exhaustive lists — the oracle configuration) and
-   * [[marginPairsIvf]] (IVF-pruned lists — the CCMatrix-scale path).
-   * BitextSpec proves the factoring: at nProbe = nList the IVF lists
-   * are the exhaustive lists and the margins agree bit-for-bit.
+   * "max" keeps each x's best-margin y. Caller: [[marginPairs]]
+   * (exhaustive lists — the oracle configuration); an IVF-pruned ranker
+   * would hand its lists to the same algebra.
    */
   def marginFromLists(fwd: DataFrame, bwd: DataFrame,
                       scale: Long = 1000L): DataFrame = {
@@ -990,81 +986,6 @@ object Similarity {
     TopK.rankTopKLong(scored, "x_id", "y_id", col("m"), 1)
       .select(col("x_id"), col("neighbor_id").as("y_id"),
         col("score").as("margin_permille"))
-  }
-
-  /** Cross-set IVF candidate scan (the [[mutualKnn]] join discipline
-    * across two DISTINCT sets): corpus rows (id, v) assign to the
-    * broadcast codebook once (one narrow projection, no shuffle); each
-    * query (qid, qv) probes its `nProbe` best lists and replicates
-    * across `salt` slices as a pure projection; candidates meet through
-    * a KEYED (list_id, slice) equi-join — parallelism nList·salt, no
-    * broadcast-NLJ full scan, neither side need fit in memory. Returns
-    * (qid, id, c = round(cos·10^9)) for every scanned cross pair. */
-  private def ivfCrossCandidates(corpus: DataFrame, queries: DataFrame,
-                                 nProbe: Int, cents: Array[Centroid],
-                                 salt: Int): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(cents)
-    val assigned = spread(corpus, "id").select(col("id"), col("v"))
-      .as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        val cs = bc.value
-        it.map { case (id, v) => (id, v, nearestList(v, cs), id % salt) }
-      }.toDF("id", "v", "list_id", "slice")
-    val probes = queries.select(col("qid"), col("qv"))
-      .as[(Long, Array[Float])]
-      .flatMap { case (qid, qv) =>
-        probeLists(qv, bc.value, nProbe).iterator.map(l => (qid, qv, l))
-      }.toDF("qid", "qv", "list_id")
-      .withColumn("slice",
-        explode(array((0 until salt).map(i => lit(i.toLong)): _*)))
-    assigned.join(probes, Seq("list_id", "slice"))
-      .filter(col("id") =!= col("qid"))
-      .withColumn("c", round(cosine(col("qv"), col("v")) * lit(1e9)).cast("long"))
-      .select(col("qid"), col("id"), col("c"))
-  }
-
-  /**
-   * PRODUCTION margin-based bitext mining — [[marginPairs]]'s algebra
-   * over IVF-PRUNED k-NN lists (the scaladoc's prescribed swap, shipped):
-   * at CCMatrix scale BOTH sides are corpora, so the forward stage scans
-   * Y through a trained coarse quantizer (each x probes `nProbe` of
-   * `nList` lists — scan cost /nList·nProbe) and the backward stage
-   * scans X the same way for the surviving candidate ys; neither stage
-   * broadcasts a corpus. At `nProbe = nList` every list is probed, the
-   * candidate relation is exactly the exhaustive cross product minus the
-   * id-equal diagonal, and the output equals [[marginPairs]] bit-for-bit
-   * (spec-tested); production sets nProbe << nList.
-   */
-  def marginPairsIvf(emb: DataFrame, leftFilter: Column, rightFilter: Column,
-                     k: Int = 4, nList: Int = 16, nProbe: Int = 4,
-                     iters: Int = 3, salt: Int = 32,
-                     scale: Long = 1000L): DataFrame = {
-    require(k >= 1 && salt >= 1, "k and salt must be >= 1")
-    val x = emb.filter(leftFilter)
-      .select(col("vec_id").as("id"), col("embedding").as("v"))
-    val y = emb.filter(rightFilter)
-      .select(col("vec_id").as("id"), col("embedding").as("v"))
-    val yCents = kmeansCodebook(emb.filter(rightFilter), nList, iters)
-    val xCents = kmeansCodebook(emb.filter(leftFilter), nList, iters)
-    if (yCents.isEmpty || xCents.isEmpty)
-      return emb.limit(0).select(col("vec_id").as("x_id"),
-        col("vec_id").as("y_id"), lit(0L).as("margin_permille"))
-    val fwd = TopK.rankTopKLong(
-      ivfCrossCandidates(y,
-        x.select(col("id").as("qid"), col("v").as("qv")), nProbe, yCents, salt),
-      "qid", "id", col("c"), k)
-      .select(col("qid").as("x_id"), col("neighbor_id").as("y_id"),
-        col("score").as("c"))
-    // backward k-NN only for ys that are forward candidates
-    val candY = fwd.select(col("y_id").as("qid")).distinct()
-      .join(y.select(col("id").as("qid"), col("v").as("qv")), Seq("qid"))
-    val bwd = TopK.rankTopKLong(
-      ivfCrossCandidates(x, candY, nProbe, xCents, salt),
-      "qid", "id", col("c"), k)
-      .select(col("qid").as("y_id"), col("score").as("c"))
-    marginFromLists(fwd, bwd, scale)
   }
 
   /**

@@ -214,6 +214,7 @@ object TextStats {
     * assignment as `packByCounts` (which is a projection of this). */
   def packRows(counted: DataFrame, budget: Long, buckets: Int = 64): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    require(budget > 0 && buckets > 0, s"budget ($budget) and buckets ($buckets) must be > 0")
     val t = counted
       .withColumn("n_tokens", col("n_tokens").cast("long"))
       .withColumn("bucket", pmod(xxhash64(col("doc_id")), lit(buckets)).cast("int"))
@@ -577,48 +578,6 @@ object TextStats {
     val h = md5(concat(col("source"), lit(":"), col("doc_id").cast("string")))
     val w = Window.partitionBy(col("source")).orderBy(h, col("doc_id"))
     docs.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("doc_id"), col("source"), col("rnk").cast("long").as("rnk"))
-  }
-
-  /**
-   * Skew-hardened EXACT per-source cap — identical output to
-   * `capPerSource` (equality-tested), but a MEGA-source never sorts its
-   * full document set: sources above `skewThreshold` docs are pre-trimmed
-   * to their smallest-md5 ~`k * fanout` documents by a numeric hash-prefix
-   * threshold BEFORE the window. The kept top-k per source are exactly the
-   * k smallest md5 values, so a prefix cut that retains >= k survivors
-   * preserves them; survivor counts are CHECKED per source and any source
-   * the cut left short (Chernoff-improbable at fanout 8, but checked, not
-   * assumed) falls back to its unfiltered rows. Three aggregations + the
-   * window over the trimmed set — the window input is O(k * fanout) per
-   * mega-source instead of O(domain size).
-   */
-  def capPerSourceSkewAware(docs: DataFrame, k: Int, fanout: Int = 8,
-                            skewThreshold: Long = 1000000L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val h = md5(concat(col("source"), lit(":"), col("doc_id").cast("string")))
-    // 60-bit numeric prefix of the hash — ordering-compatible with the
-    // hex-string order the window uses (both are byte-lexicographic)
-    val h60 = conv(substring(h, 1, 15), 16, 10).cast("long")
-    val counts = docs.groupBy(col("source")).agg(count(lit(1)).as("src_cnt"))
-    val withH = docs.select(col("doc_id"), col("source")).withColumn("h", h)
-      .withColumn("h60", h60)
-      .join(counts, Seq("source"))
-    val hot = col("src_cnt") > skewThreshold
-    // double arithmetic: k*fanout * 2^60 overflows Long (ANSI throws); the
-    // ~2^7 double rounding slack is immaterial — the >= k guard is exact
-    val cutoff = (lit((k.toLong * fanout).toDouble) / col("src_cnt") *
-      lit(math.pow(2, 60))).cast("long")
-    val survivors = withH.filter(!hot || col("h60") < cutoff)
-    // exactness guard: a hot source must keep >= k survivors, else take all
-    val short = survivors.groupBy(col("source")).agg(count(lit(1)).as("n_surv"))
-      .filter(col("n_surv") < k).select(col("source"))
-    val windowInput = survivors
-      .unionByName(withH.filter(hot).join(short, Seq("source")))
-      .dropDuplicates("doc_id")
-    val w = Window.partitionBy(col("source")).orderBy(col("h"), col("doc_id"))
-    windowInput.withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
       .select(col("doc_id"), col("source"), col("rnk").cast("long").as("rnk"))
   }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.link.Blocking
+import graft.ops.Dedup
 import org.apache.spark.sql.functions._
 
 class BlockingSpec extends SparkSpec {
@@ -81,7 +82,7 @@ class BlockingSpec extends SparkSpec {
     assert(got.contains(("merge", "merge", 4L, 4L))) // identical string
     assert(got.exists(p => p._1 == "batc" && p._2 == "batch"))
     assert(!got.exists(_._1 == "zz")) // 1-bigram string matches nothing here
-    assert(Blocking.lastDropReport("fuzzyJoin") == ((0L, 0L)))
+    assert(Dedup.lastDropReport("fuzzyJoin") == ((0L, 0L)))
   }
 
   test("fuzzyJoin: random twin at two partitionings; loud cap only loses") {
@@ -110,7 +111,22 @@ class BlockingSpec extends SparkSpec {
     assert(expect.nonEmpty)
     // a tiny cap reports drops loudly and can only LOSE pairs
     val capped = run(5, cap = 2)
-    assert(Blocking.lastDropReport("fuzzyJoin")._1 > 0L)
+    assert(Dedup.lastDropReport("fuzzyJoin")._1 > 0L)
     assert(capped.subsetOf(expect))
+  }
+
+  test("one drop store: capped mergeCandidates and fuzzyJoin both report in Dedup.lastDropReport") {
+    import spark.implicits._
+    Dedup.lastDropReport.remove("merge_candidates")
+    Dedup.lastDropReport.remove("fuzzyJoin")
+    // witness "hub" is shared by 6 nodes, above the cap of 5
+    val occ = ((1L to 6L).map(n => (n, "hub")) ++ Seq((1L, "p"), (2L, "p")))
+      .toDF("node", "w")
+    graft.kg.Graphs.mergeCandidates(occ, 1, 100, maxWitnessDegree = 5L).collect()
+    // prefix gram "ab" is in 3 catalog strings, above the cap of 2
+    Blocking.fuzzyJoin(Seq("ab").toDF("q"), "q",
+        Seq("xab", "yab", "zab").toDF("c"), "c", maxGramPostings = 2).collect()
+    assert(Dedup.lastDropReport.get("merge_candidates") === Some((1L, 6L)))
+    assert(Dedup.lastDropReport.get("fuzzyJoin") === Some((1L, 3L)))
   }
 }

@@ -230,9 +230,9 @@ class FuzzSpec extends SparkSpec {
         val kept = ps.zipWithIndex.collect { case (p, i) if first(p) == ((id, i)) => p }
         (id, ps.length.toLong, (ps.length - kept.length).toLong, kept.mkString("\n"))
       }.toSet
-      assert(rows(Dedup.dedupParagraphs(df)) == want, s"trial $trial exact mode")
-      assert(rows(Dedup.dedupParagraphs(df.repartition(5), hashKeys = true)) == want,
-        s"trial $trial hash mode")
+      assert(rows(Dedup.dedupParagraphs(df)) == want, s"trial $trial")
+      assert(rows(Dedup.dedupParagraphs(df.repartition(5))) == want,
+        s"trial $trial repartitioned")
     }
   }
 

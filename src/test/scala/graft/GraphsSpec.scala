@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.kg.Graphs
+import graft.ops.Dedup
 
 class GraphsSpec extends SparkSpec {
 
@@ -108,18 +109,18 @@ class GraphsSpec extends SparkSpec {
     // witness "hub" is shared by all 6 nodes; "p" only by 1 and 2
     val occ = ((1L to 6L).map(n => (n, "hub")) ++ Seq((1L, "p"), (2L, "p")))
       .toDF("node", "w")
-    Graphs.lastDropReport.remove("merge_candidates")
+    Dedup.lastDropReport.remove("merge_candidates")
     val got = Graphs.mergeCandidates(occ, 1, 100, maxWitnessDegree = 5L)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     // hub excluded: only (1,2) via "p" survives, with common=1 (lower bound)
     assert(got === Set((1L, 2L, 1L)))
-    assert(Graphs.lastDropReport("merge_candidates") === ((1L, 6L)))
+    assert(Dedup.lastDropReport("merge_candidates") === ((1L, 6L)))
     // uncapped is exact and does not touch the report
-    Graphs.lastDropReport.remove("merge_candidates")
+    Dedup.lastDropReport.remove("merge_candidates")
     val exact = Graphs.mergeCandidates(occ, 1, 100).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     assert(exact.size === 15 && exact.contains((1L, 2L, 2L, 2L)))
-    assert(!Graphs.lastDropReport.contains("merge_candidates"))
+    assert(!Dedup.lastDropReport.contains("merge_candidates"))
   }
 
   test("bfs: twin equality, driver AND distributed paths, depth truncation") {
@@ -221,16 +222,16 @@ class GraphsSpec extends SparkSpec {
     // result equals the twin computed on the non-hub mentions only
     val hub = (0 until 9).map(i => ("hub", 100L + i))
     val df = (mentions ++ hub).toDF("ctx", "node")
-    Graphs.lastDropReport.remove("pmi_edges")
+    Dedup.lastDropReport.remove("pmi_edges")
     val got = Graphs.pmiEdges(df, minSupport = 2L, maxContextDegree = 8L).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5))).toSet
     assert(got === seqPmi(mentions, 2L))
-    assert(Graphs.lastDropReport("pmi_edges") === ((1L, 9L)))
+    assert(Dedup.lastDropReport("pmi_edges") === ((1L, 9L)))
     // uncapped leaves no report
-    Graphs.lastDropReport.remove("pmi_edges")
+    Dedup.lastDropReport.remove("pmi_edges")
     Graphs.pmiEdges(df, minSupport = 2L).collect()
-    assert(!Graphs.lastDropReport.contains("pmi_edges"))
+    assert(!Dedup.lastDropReport.contains("pmi_edges"))
   }
 
   // ---- coreness ----
@@ -740,7 +741,7 @@ class GraphsSpec extends SparkSpec {
     val capped = Graphs.linkPrediction(edgesDf(graph, 7),
       maxNeighborDegree = 2L)
     assert(capped.count() <= got.size)
-    val (nDropped, slots) = Graphs.lastDropReport("link_prediction")
+    val (nDropped, slots) = Dedup.lastDropReport("link_prediction")
     assert(nDropped >= 1L && slots > 2L)
     // degrees stay TRUE degrees in capped runs (only cn is a lower bound)
     val degs = seqLinkPred(graph).map(t => (t._1, t._4)).toMap
@@ -1771,7 +1772,7 @@ class GraphsSpec extends SparkSpec {
         .map(r => r.getLong(0) -> r.getDecimal(1).longValueExact()).toMap
       assert(got === want, s"parts=$parts")
     }
-    val (dropped, _) = Graphs.lastDropReport("butterflies")
+    val (dropped, _) = Dedup.lastDropReport("butterflies")
     assert(dropped === 0L)
   }
 
@@ -1783,7 +1784,7 @@ class GraphsSpec extends SparkSpec {
     val got = Graphs.butterflies(bipDf(inc), maxLeftDegree = 5L).collect()
       .map(r => r.getLong(0) -> r.getDecimal(1).longValueExact()).toMap
     assert(got(1L) === 1L && got(2L) === 1L)
-    assert(Graphs.lastDropReport("butterflies") === ((1L, 10L)))
+    assert(Dedup.lastDropReport("butterflies") === ((1L, 10L)))
     // capped run loses the hub's entities from the universe too (they have
     // no other incidence): ids 3..10 absent
     assert(!got.contains(3L))

@@ -138,17 +138,17 @@ class KgFactsSpec extends SparkSpec {
     val quiet = Seq((1L, "p", 2L), (2L, "q", 3L), (1L, "r", 3L),
       (200L, "h", 300L))
     val df = (hub ++ quiet).toDF("subj", "pred", "obj")
-    graft.kg.Graphs.lastDropReport.remove("rule_mining")
+    graft.ops.Dedup.lastDropReport.remove("rule_mining")
     val got = minedSet(Triples.mineRules(df, 1L, maxMidFanout = 24L))
     // the hub's (a,b,*) rules vanish; the quiet composition survives
     assert(!got.exists(t => t._1 == "a" && t._2 == "b"))
     assert(got contains (("p", "q", "r", 1L, 1L, 1L)))
-    assert(graft.kg.Graphs.lastDropReport("rule_mining") === ((1L, 25L)))
+    assert(graft.ops.Dedup.lastDropReport("rule_mining") === ((1L, 25L)))
     // uncapped: hub rules present, no report
-    graft.kg.Graphs.lastDropReport.remove("rule_mining")
+    graft.ops.Dedup.lastDropReport.remove("rule_mining")
     val exact = minedSet(Triples.mineRules(df, 1L))
     assert(exact.exists(t => t._1 == "a" && t._2 == "b" && t._4 == 25L))
-    assert(!graft.kg.Graphs.lastDropReport.contains("rule_mining"))
+    assert(!graft.ops.Dedup.lastDropReport.contains("rule_mining"))
   }
 
   test("diffSnapshots: added/removed/changed, unchanged facts never emitted") {

@@ -142,6 +142,13 @@ class OpsSpec extends SparkSpec {
     assert(repart.sorted.toSeq == packed.sorted.toSeq)
   }
 
+  test("packRows rejects a non-positive budget or bucket count") {
+    val counted = spark.range(3).select(col("id").as("doc_id"), lit(5L).as("n_tokens"))
+    intercept[IllegalArgumentException](TextStats.packRows(counted, budget = -1L))
+    intercept[IllegalArgumentException](TextStats.packRows(counted, budget = 0L))
+    intercept[IllegalArgumentException](TextStats.packRows(counted, budget = 64L, buckets = 0))
+  }
+
   test("multimodal resize: aspect-preserving fit, no upscale, audio dropped") {
     import spark.implicits._
     val d = docs(0L -> "an image doc body", 1L -> "an audio doc", 2L -> "a video doc body here")
@@ -349,10 +356,6 @@ class OpsSpec extends SparkSpec {
     assert(got(2L) == ((4L, 1L)), got(2L))
     assert(got(3L) == ((3L, 0L)), got(3L))
     assert(got(4L) == ((0L, 0L)), got(4L))
-    // the 100 TB hash-keyed path (8-byte shuffle keys) counts identically
-    val hashed = Dedup.dupSpans(d, k = 10, hashKeys = true).as[(Long, Long, Long)]
-      .collect().map(r => r._1 -> (r._2, r._3)).toMap
-    assert(hashed == got)
   }
 
   test("decontaminate flags benchmark n-gram overlap; plan broadcasts the benchmark") {
@@ -548,13 +551,6 @@ class OpsSpec extends SparkSpec {
         .map { case (id, t) => graft.golden.SequentialTwin.Doc(id, t, "en", "s") }, k = 10)
       .map(t => t._1 -> ((t._2, t._3, t._4))).toMap
     assert(twin == got, s"twin=$twin got=$got")
-    // the hash-keyed 100 TB shuffle variant agrees on the corpus
-    val parquet = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val byText = Dedup.removeDupSpans(parquet, k = 10).collect()
-      .map(r => (r.getLong(0), r.getLong(2), r.getString(3))).toSet
-    val byHash = Dedup.removeDupSpans(parquet, k = 10, hashKeys = true).collect()
-      .map(r => (r.getLong(0), r.getLong(2), r.getString(3))).toSet
-    assert(byText == byHash)
   }
 
   test("removeDupSpans pathological doc (90% duplicated) is not quadratic") {
@@ -604,25 +600,6 @@ class OpsSpec extends SparkSpec {
     val repart = TextStats.capPerSource(parquet.repartition(13), 5).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     assert(repart == c5, "cap subset must be partition-invariant")
-  }
-
-  test("capPerSourceSkewAware == capPerSource with a mega-source; window input bounded") {
-    import spark.implicits._
-    // one 20k-doc mega-source + two small ones
-    val rows = (1L to 20000L).map(i => (i, "mega")) ++
-      (30001L to 30020L).map(i => (i, "small1")) ++ Seq((40001L, "tiny"))
-    val d = rows.toDF("doc_id", "source")
-      .withColumn("text", concat(lit("t"), col("doc_id")))
-      .withColumn("lang", lit("en")).withColumn("n_chars", lit(5L))
-    val plain = TextStats.capPerSource(d, 10).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-    val skew = TextStats.capPerSourceSkewAware(d, 10, fanout = 8, skewThreshold = 1000L)
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-    assert(skew == plain, s"skew-aware diverged: ${skew.diff(plain)} / ${plain.diff(skew)}")
-    // and with an absurd threshold that forces the fallback guard
-    val tight = TextStats.capPerSourceSkewAware(d, 10, fanout = 1, skewThreshold = 10L)
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-    assert(tight == plain, "fallback guard must preserve exactness")
   }
 
   test("repetitionProfile flags repeated-ngram docs, passes diverse docs") {
@@ -879,13 +856,12 @@ class OpsSpec extends SparkSpec {
       (2L, 2L, 1L, "g h"),
       (3L, 3L, 2L, "z z"),
       (4L, 1L, 0L, "q r")))
-    // corpus: hash-keyed (100 TB) mode and partitioning change nothing
+    // corpus: partitioning changes nothing
     val docs = Dedup.syntheticParagraphs(
       spark.read.parquet("/root/testdata/sf0.001/documents.parquet"))
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSet
     val exact = rows(Dedup.dedupParagraphs(docs))
-    assert(rows(Dedup.dedupParagraphs(docs, hashKeys = true)) == exact)
     assert(rows(Dedup.dedupParagraphs(docs.repartition(7))) == exact)
     // independent twin (enrichment + dedup re-derived from spec)
     val seqDocs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -1188,7 +1164,7 @@ class OpsSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> ((r.getLong(3), r.getString(4)))).toMap
     assert(wiped(1L) == ((1L, "")) && wiped(2L) == ((2L, "")) &&
       wiped(3L) == ((1L, "z")), wiped.toString)
-    // corpus enrichment: hash-key mode and partitioning change nothing;
+    // corpus enrichment: partitioning changes nothing;
     // every doc loses its nav header, even doc_ids the footer too
     val docs = Dedup.syntheticBoilerplate(
       spark.read.parquet("/root/testdata/sf0.001/documents.parquet"))
@@ -1196,7 +1172,6 @@ class OpsSpec extends SparkSpec {
       df.collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
         r.getLong(3), r.getString(4))).toSet
     val exact = rows(Dedup.stripBoilerplate(docs))
-    assert(rows(Dedup.stripBoilerplate(docs, hashKeys = true)) == exact)
     assert(rows(Dedup.stripBoilerplate(docs.repartition(7))) == exact)
     assert(exact.forall { case (id, _, _, nRem, clean) =>
       nRem == (if (id % 2 == 0) 2L else 1L) && !clean.contains("nav ") &&

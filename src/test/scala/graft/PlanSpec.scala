@@ -245,12 +245,10 @@ class PlanSpec extends SparkSpec {
     assert(!p71.contains("Join"), p71.take(3000))
     val exchanges = p71.linesIterator.count(_.trim.matches("\\(\\d+\\) Exchange.*"))
     assert(exchanges == 2, s"expected 2 exchanges, got $exchanges:\n${p71.take(3000)}")
-    // paragraph dedup, 100 TB mode: scans pruned past lang/source and the
-    // keeper aggregation keys on xxhash64 (text never rides that shuffle)
+    // paragraph dedup: scans pruned past lang/source
     val docs = graft.ops.Dedup.syntheticParagraphs(
       spark.read.parquet(s"$sf/documents.parquet"))
-    val p68 = plan(graft.ops.Dedup.dedupParagraphs(docs, hashKeys = true))
-    assert(p68.contains("xxhash64"), p68.take(3000))
+    val p68 = plan(graft.ops.Dedup.dedupParagraphs(docs))
     val rs = p68.linesIterator.filter(_.contains("ReadSchema")).toSeq
     assert(rs.nonEmpty && rs.forall(r => !r.contains("lang") && !r.contains("source")),
       rs.toString)

@@ -1,6 +1,7 @@
 package graft
 
-import graft.kg.{Graphs, Rdf}
+import graft.kg.Rdf
+import graft.ops.Dedup
 
 class RdfSpec extends SparkSpec {
 
@@ -39,13 +40,13 @@ class RdfSpec extends SparkSpec {
   }
 
   test("control characters quarantine loudly, clean rows still emit") {
-    Graphs.lastDropReport.remove("nquads")
+    Dedup.lastDropReport.remove("nquads")
     val rows = Seq((1L, "is", 2L, "https://ok"), (3L, "bad\tpred", 4L, "https://ok"),
       (5L, "is", 6L, "https://bad\nurl"))
     val lines = Rdf.toNQuads(df(rows)).collect()
     assert(lines.length === 1)
     assert(lines.head.getString(0).contains("/e/1>"))
-    assert(Graphs.lastDropReport("nquads")._1 === 2L)
+    assert(Dedup.lastDropReport("nquads")._1 === 2L)
   }
 
   test("malformed lines parse to null fields") {

@@ -17,4 +17,12 @@ class RunSummarySpec extends AnyFunSuite {
     assert(p.get("out").asText == root)
     assert(p.get("triples_total").asLong == 42L && p.get("decoder").asText == "viterbi")
   }
+
+  test("RunPipeline accepts only greedy or viterbi as its decoder") {
+    assert(!RunPipeline.viterbi(Array("sf", "out")))
+    assert(!RunPipeline.viterbi(Array("sf", "out", "greedy")))
+    assert(RunPipeline.viterbi(Array("sf", "out", "viterbi")))
+    intercept[IllegalArgumentException](RunPipeline.viterbi(Array("sf", "out", "viterbl")))
+    intercept[IllegalArgumentException](RunPipeline.viterbi(Array("sf", "out", "Viterbi")))
+  }
 }

@@ -56,53 +56,6 @@ class TableIOSpec extends SparkSpec {
     intercept[IllegalArgumentException](TableIO.readAt(spark, root, "lang", 9))
   }
 
-  test("compaction rewrites many-file partitions without changing rows") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("tableio-compact").toString
-    // a fragmented partition: 12 separate appends -> 12 files under lang=en
-    (1 to 12).foreach { i =>
-      Seq((i.toLong, s"t$i", "en")).toDF("id", "v", "lang")
-        .coalesce(1).write.mode("append").partitionBy("lang").parquet(s"$root/data")
-    }
-    TableIO.commitSnapshot(root, Seq("en"))
-    val before = TableIO.read(spark, root, "lang").collect().map(_.toString).sorted
-    def nFiles = Files.list(java.nio.file.Paths.get(root, "data", "lang=en"))
-      .toArray.map(_.toString).count(_.endsWith(".parquet"))
-    assert(nFiles >= 12)
-    val rewritten = TableIO.compact(spark, root, "lang", maxFilesPerPartition = 8, targetFiles = 1)
-    assert(rewritten == Seq("en"))
-    assert(nFiles == 1, s"expected 1 file after compaction, got $nFiles")
-    val after = TableIO.read(spark, root, "lang").collect().map(_.toString).sorted
-    assert(after.toSeq == before.toSeq)
-    // idempotent: already-compacted partitions are left alone
-    assert(TableIO.compact(spark, root, "lang", 8, 1).isEmpty)
-  }
-
-  test("compaction crash inside the rename swap heals on next read") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("tableio-crash").toString
-    Seq((1L, "a", "en"), (2L, "b", "en")).toDF("id", "v", "lang")
-      .write.partitionBy("lang").parquet(s"$root/data")
-    TableIO.commitSnapshot(root, Seq("en"))
-    val before = TableIO.read(spark, root, "lang").collect().map(_.toString).sorted
-    // simulate a crash between compact's two renames: the partition dir was
-    // moved aside to .old, the rewritten tmp never landed
-    val data = java.nio.file.Paths.get(root, "data")
-    Files.move(data.resolve("lang=en"), data.resolve(".compact-lang=en.old"))
-    Files.createDirectories(data.resolve(".compact-lang=en.tmp")) // orphan tmp
-    // snapshot-consistent read heals: .old restored, orphan tmp removed
-    val after = TableIO.read(spark, root, "lang").collect().map(_.toString).sorted
-    assert(after.toSeq == before.toSeq)
-    assert(Files.isDirectory(data.resolve("lang=en")))
-    assert(!Files.exists(data.resolve(".compact-lang=en.old")))
-    assert(!Files.exists(data.resolve(".compact-lang=en.tmp")))
-    // stale .old NEXT TO a landed rewrite is garbage-collected, data kept
-    Files.createDirectories(data.resolve(".compact-lang=en.old"))
-    val again = TableIO.read(spark, root, "lang").collect().map(_.toString).sorted
-    assert(again.toSeq == before.toSeq)
-    assert(!Files.exists(data.resolve(".compact-lang=en.old")))
-  }
-
   test("lineage rows persist as json") {
     val root = Files.createTempDirectory("lineage").toString
     TableIO.writeLineage(root, "ner.tag", Seq(LineageRow("ner.tag", 0, 10, 9, 42, "")))
@@ -111,33 +64,6 @@ class TableIOSpec extends SparkSpec {
     val content = new String(Files.readAllBytes(files(0).asInstanceOf[java.nio.file.Path]), "UTF-8")
     assert(content.contains("\"rowsIn\":10"))
     assert(content.contains("\"stage\":\"ner.tag\""))
-  }
-
-  test("expireSnapshots: retention keeps reads + latest time travel, " +
-      "expired ids die loudly, numbering continues") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("tableio-expire").toString
-    def batch(lang: String, v: Long) =
-      Seq((v, lang)).toDF("v", "lang")
-    TableIO.writeResumable(batch("en", 1L), root, "lang")   // snapshot 0
-    TableIO.writeResumable(batch("de", 2L), root, "lang")   // snapshot 1
-    TableIO.writeResumable(batch("hi", 3L), root, "lang")   // snapshot 2
-    assert(TableIO.listSnapshots(root).map(_.id) == Seq(0, 1, 2))
-    val expired = TableIO.expireSnapshots(root, keepLast = 1)
-    assert(expired == Seq(0, 1))
-    assert(TableIO.listSnapshots(root).map(_.id) == Seq(2))
-    // live reads and the surviving snapshot unchanged
-    assert(TableIO.read(spark, root, "lang").count() == 3L)
-    assert(TableIO.readAt(spark, root, "lang", 2).count() == 3L)
-    // expired time travel fails loudly
-    val ex = intercept[IllegalArgumentException] {
-      TableIO.readAt(spark, root, "lang", 0).count()
-    }
-    assert(ex.getMessage.contains("no snapshot 0"))
-    // numbering continues past the expired range
-    TableIO.writeResumable(batch("es", 4L), root, "lang")
-    assert(TableIO.listSnapshots(root).map(_.id) == Seq(2, 3))
-    assert(TableIO.read(spark, root, "lang").count() == 4L)
   }
 
   test("one pass: writeResumable reads each parquet input record once") {
