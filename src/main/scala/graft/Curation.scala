@@ -64,7 +64,12 @@ object Curation {
     (c.out, c.report)
   }
 
+  /** Checked on entry, before any Spark job: even reading the documents runs one. */
+  private def requireBudget(budget: Long): Unit =
+    require(budget > 0, s"budget ($budget) must be > 0")
+
   private def chain(docs: DataFrame, budget: Long): Chain = {
+    requireBudget(budget)
     val (quality, docsIn, nQuality, msQuality) =
       boundary(docs, TextStats.keepPredicate(col("text")))
 
@@ -88,15 +93,17 @@ object Curation {
     // rarity, redaction and packing: one projection and one bucket window
     // over the rows themselves. A doc with no char n-gram has no rarity (no
     // lmScore row) and is not written; it still counts toward its bucket's
-    // running token sum.
+    // running token sum. The model's broadcast is released here if the rest
+    // of the chain fails to build, else by the caller once the rows are written.
     val (scored, release) = TextStats.lmAnnotate(unrepetitive, TextStats.lmTrain(unrepetitive))
-    val out = TextStats.packRows(scored.select(col("doc_id"), col("lang"), col("source"),
+    val out = try TextStats.packRows(scored.select(col("doc_id"), col("lang"), col("source"),
         TextStats.redactedText(col("text")).as("text"),
         TextStats.tokenCount(col("text")).as("n_tokens"),
         col("n_grams"), col("lm_logprob")), budget)
       .filter(col("n_grams").isNotNull)
       .select(col("doc_id"), col("lang"), col("source"), col("text"),
         col("n_tokens"), col("bucket"), col("pack_id"), col("lm_logprob"))
+    catch { case e: Throwable => release(); throw e }
 
     def row(stage: String, in: Long, outRows: Long, ms: Long, detail: String = "") =
       LineageRow(stage, -1, in, outRows, ms, detail)
@@ -131,6 +138,7 @@ object Curation {
     * that commits nothing did no work to record and writes no lineage. */
   def runAndWrite(spark: SparkSession, sfDir: String, outRoot: String,
                   budget: Long = 512L): Report = {
+    requireBudget(budget)
     val c = chain(spark.read.parquet(s"$sfDir/documents.parquet"), budget)
     val langs = try TableIO.writeResumable(c.out, outRoot, "lang") finally c.release()
     if (langs.nonEmpty) TableIO.writeLineage(outRoot, "curation", c.lineage)

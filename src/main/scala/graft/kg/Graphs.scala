@@ -1,8 +1,8 @@
 package graft.kg
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.core.Adaptive
+import graft.core.{Adaptive, Rounds}
 import graft.ops.Dedup
 
 /**
@@ -565,8 +565,8 @@ object Graphs {
    * already derived, and unions the survivors in. Work per round is
    * proportional to |delta ⋈ edges|, never |closure ⋈ edges| (the naive
    * evaluation re-derives the whole closure every round); the edge side
-   * is repartitioned by join key once and `localCheckpoint` per round
-   * keeps the plan flat (the PageRank/BFS iteration discipline).
+   * is repartitioned by join key once, and [[Rounds.frontier]] runs the
+   * rounds until one derives nothing.
    *
    * 100 TB shape: closure of a general web graph is Θ(n²) — run this on
    * ONTOLOGY-shaped predicates (class/part hierarchies: forest-like,
@@ -584,24 +584,14 @@ object Graphs {
     Adaptive.small(directed(edgesIn), smallGraphThreshold)(rows =>
       driverClosure(edgesIn.sparkSession, Adaptive.pairs(rows))) { edges =>
       val e = edges.repartition(col("src")).localCheckpoint(true)
-      var closure = edges
-      var delta = closure
-      var done = false
-      while (!done) {
-        val next = delta.select(col("src").as("a"), col("dst").as("m"))
+      Rounds.frontier(edges, edges, Int.MaxValue) { (closure, delta, _) =>
+        delta.select(col("src").as("a"), col("dst").as("m"))
           .join(e.select(col("src").as("m"), col("dst").as("b")), Seq("m"))
           .select(col("a").as("src"), col("b").as("dst"))
           .filter(col("src") =!= col("dst"))
           .distinct()
           .join(closure, Seq("src", "dst"), "left_anti")
-          .localCheckpoint(true)
-        if (next.isEmpty) done = true
-        else {
-          closure = closure.unionAll(next).localCheckpoint(true)
-          delta = next
-        }
-      }
-      closure
+      }((closure, r) => closure.unionAll(r.rows))
     }
   }
 
@@ -764,33 +754,37 @@ object Graphs {
     }
   }
 
-  /** Sequential hop-bounded Bellman–Ford — the driver fallback twin of
-    * [[sssp]] (must match its <= maxHops semantics exactly, so no
-    * Dijkstra: each round relaxes only last round's improved nodes). */
-  private def driverSssp(spark: org.apache.spark.sql.SparkSession,
-                         edges: Array[(Long, Long, Long)], seedIds: Array[Long],
-                         maxHops: Int): DataFrame = {
+  /** Sequential hop-bounded frontier Bellman–Ford — the driver twin of
+    * [[relaxation]] (must match its <= maxHops semantics exactly, so no
+    * Dijkstra: each round relaxes only last round's improved nodes).
+    * `relax(value(u), w)` is the candidate value at v of an edge (u, v, w),
+    * `Long.MaxValue` when the edge is unusable.
+    * @return (id, `value`), `start` for the seeds */
+  private[kg] def driverRelaxation(spark: org.apache.spark.sql.SparkSession,
+                                   edges: Array[(Long, Long, Long)], seedIds: Array[Long],
+                                   start: Long, maxHops: Int, value: String)(
+                                   relax: (Long, Long) => Long): DataFrame = {
     import spark.implicits._
     val adj = edges.groupBy(_._1).map { case (s, es) => s -> es.map(e => (e._2, e._3)) }
-    val dist = scala.collection.mutable.HashMap.empty[Long, Long]
+    val best = scala.collection.mutable.HashMap.empty[Long, Long]
     var frontier = seedIds.distinct.toSeq
-    frontier.foreach(dist(_) = 0L)
+    frontier.foreach(best(_) = start)
     var h = 0
     while (h < maxHops && frontier.nonEmpty) {
       h += 1
       val improved = scala.collection.mutable.HashMap.empty[Long, Long]
       frontier.foreach { u =>
         adj.getOrElse(u, Array.empty[(Long, Long)]).foreach { case (v, w) =>
-          val d = dist(u) + w
-          if (d < dist.getOrElse(v, Long.MaxValue) &&
-              d < improved.getOrElse(v, Long.MaxValue)) improved(v) = d
+          val c = relax(best(u), w)
+          if (c < best.getOrElse(v, Long.MaxValue) &&
+              c < improved.getOrElse(v, Long.MaxValue)) improved(v) = c
         }
       }
-      val real = improved.filter { case (v, d) => d < dist.getOrElse(v, Long.MaxValue) }
-      real.foreach { case (v, d) => dist(v) = d }
+      val real = improved.filter { case (v, c) => c < best.getOrElse(v, Long.MaxValue) }
+      real.foreach { case (v, c) => best(v) = c }
       frontier = real.keys.toSeq
     }
-    dist.toSeq.toDF("id", "dist")
+    best.toSeq.toDF("id", value)
   }
 
   /**
@@ -802,14 +796,10 @@ object Graphs {
    * must be NON-NEGATIVE integers; all arithmetic is Long addition and
    * order-free min, so results are engine-exact at any partitioning.
    *
-   * Distributed loop: each round joins ONLY the frontier (nodes whose
-   * distance improved last round) against the edge list, min-aggregates
-   * candidates per target (map-side partial), and keeps strict
-   * improvements — classic frontier Bellman–Ford: after round h every
-   * distance equals the true minimum over <= h-hop paths, and a round
-   * with no improvement terminates early. Work per round is the
-   * frontier's out-edges, never the whole graph; `localCheckpoint` per
-   * round keeps the plan flat (the BFS/closure discipline). Negative
+   * Distributed loop: classic frontier Bellman–Ford ([[relaxation]],
+   * candidate dist(u) + w) — each round relaxes only the out-edges of
+   * the nodes whose distance improved last round, so work per round is
+   * the frontier's out-edges, never the whole graph. Negative
    * weights are rejected LOUDLY (checked in the same pass that sizes the
    * graph — no extra scan). Adaptive driver fallback below
    * [[SmallGraphThreshold]] edges; the distributed loop is the scale
@@ -832,31 +822,44 @@ object Graphs {
     Adaptive.small(edges, smallGraphThreshold) { rows =>
       val es = rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       requireNonNegative(es.foldLeft(0L)((m, e) => math.min(m, e._3)))
-      driverSssp(edgesIn.sparkSession, es, seedIds.collect().map(_.getLong(0)), maxHops)
+      driverRelaxation(edgesIn.sparkSession, es, seedIds.collect().map(_.getLong(0)),
+        0L, maxHops, "dist")(_ + _)
     } { edges =>
       requireNonNegative(edges.agg(coalesce(min(col("w")), lit(0L))).head().getLong(0))
-      val e = edges.repartition(col("src")).localCheckpoint(true)
-      var dist = seedIds.withColumn("dist", lit(0L)).localCheckpoint(true)
-      var frontier = dist
-      var h = 0
-      var done = false
-      while (h < maxHops && !done) {
-        h += 1
-        val cand = frontier.withColumnRenamed("id", "src")
-          .join(e, Seq("src"))
-          .select(col("dst").as("id"), (col("dist") + col("w")).as("cand"))
-          .groupBy(col("id")).agg(min(col("cand")).as("cand"))
-        val improved = cand.join(dist, Seq("id"), "left")
-          .filter(col("dist").isNull || col("cand") < col("dist"))
-          .select(col("id"), col("cand").as("dist")).localCheckpoint(true)
-        if (improved.isEmpty) done = true
-        else {
-          dist = dist.join(improved.select(col("id")), Seq("id"), "left_anti")
-            .unionAll(improved).localCheckpoint(true)
-          frontier = improved
-        }
-      }
-      dist
+      relaxation(edges, seedIds.withColumn("dist", lit(0L)), "dist", maxHops,
+        col("dist") + col("w"))
+    }
+  }
+
+  /**
+   * Hop-bounded frontier Bellman–Ford over [[Rounds]], shared by [[sssp]]
+   * and [[Temporal.earliestReach]]: each round joins ONLY the frontier
+   * (id, `value`) — the nodes whose value improved last round — against
+   * the out-edges (src, dst, ...), keeps the edges where `usable` holds,
+   * min-aggregates the candidate `cand` per target (map-side partial) and
+   * keeps strict improvements. After round h every value is the minimum
+   * over <= h-hop paths, and a round with no improvement ends the loop.
+   *
+   * @param edges  the edges, repartitioned by src here
+   * @param seeds  (id, `value`) at round 0
+   * @return (id, `value`) for every reached node
+   */
+  private[kg] def relaxation(edges: DataFrame, seeds: DataFrame, value: String,
+                             maxHops: Int, cand: Column,
+                             usable: Column = lit(true)): DataFrame = {
+    val e = edges.repartition(col("src")).localCheckpoint(true)
+    val state0 = seeds.localCheckpoint(true)
+    Rounds.frontier(state0, state0, maxHops) { (state, frontier, _) =>
+      frontier.withColumnRenamed("id", "src")
+        .join(e, Seq("src"))
+        .filter(usable)
+        .select(col("dst").as("id"), cand.as("cand"))
+        .groupBy(col("id")).agg(min(col("cand")).as("cand"))
+        .join(state, Seq("id"), "left")
+        .filter(col(value).isNull || col("cand") < col(value))
+        .select(col("id"), col("cand").as(value))
+    } { (state, r) =>
+      state.join(r.rows.select(col("id")), Seq("id"), "left_anti").unionAll(r.rows)
     }
   }
 
@@ -870,9 +873,8 @@ object Graphs {
    * frontier (nodes first reached last level) against the edge list,
    * anti-joins the settled set, and unions the survivors in at distance
    * d. Work per level is proportional to the frontier's out-edges, never
-   * the whole graph; `localCheckpoint` per level keeps the plan flat
-   * (the PageRank iteration discipline). Terminates early on an empty
-   * frontier. Unreachable nodes emit no row.
+   * the whole graph; [[Rounds.frontier]] runs the levels and ends early
+   * on an empty frontier. Unreachable nodes emit no row.
    *
    * @return (id: long, dist: int), dist = 0 for the seeds themselves.
    */
@@ -884,23 +886,13 @@ object Graphs {
       driverBfs(edgesIn.sparkSession, Adaptive.pairs(rows),
         seedIds.collect().map(_.getLong(0)), maxDepth)) { edges =>
       val e = edges.repartition(col("src")).localCheckpoint(true)
-      var dist = seedIds.withColumn("dist", lit(0)).localCheckpoint(true)
-      var frontier = dist.select(col("id"))
-      var d = 0
-      var done = false
-      while (d < maxDepth && !done) {
-        d += 1
-        val next = e.join(frontier.withColumnRenamed("id", "src"), Seq("src"))
+      val dist0 = seedIds.withColumn("dist", lit(0)).localCheckpoint(true)
+      Rounds.frontier(dist0, dist0, maxDepth) { (dist, frontier, d) =>
+        e.join(frontier.select(col("id").as("src")), Seq("src"))
           .select(col("dst").as("id")).distinct()
           .join(dist.select(col("id")), Seq("id"), "left_anti")
-          .localCheckpoint(true)
-        if (next.isEmpty) done = true
-        else {
-          dist = dist.unionAll(next.withColumn("dist", lit(d))).localCheckpoint(true)
-          frontier = next
-        }
-      }
-      dist
+          .withColumn("dist", lit(d))
+      }((dist, r) => dist.unionAll(r.rows))
     }
   }
 
@@ -2055,9 +2047,11 @@ object Graphs {
    * per-row `array_contains` simplicity filter (arrays are <= maxLen
    * long — constant work). Paths that reach `dst` retire immediately: a
    * simple path cannot leave and revisit dst, so extending them is
-   * provably wasted work. Enumeration is inherently combinatorial —
-   * `maxFrontier` bounds each step LOUDLY (IllegalStateException, never
-   * a silent truncation: a partial path census would read as a lie).
+   * provably wasted work. [[Rounds.frontier]] runs the steps, and its
+   * per-step row count serves the bound: enumeration is inherently
+   * combinatorial, so `maxFrontier` bounds each step LOUDLY
+   * (IllegalStateException, never a silent truncation: a partial path
+   * census would read as a lie).
    *
    * @return (path — comma-joined node ids, n_hops) for every simple
    *         src→dst path with 1 <= n_hops <= maxLen
@@ -2071,29 +2065,21 @@ object Graphs {
       .select(col("src").cast("long"), col("dst").cast("long"))
       .filter(col("src") =!= col("dst")).distinct()
       .repartition(col("src")).localCheckpoint(true)
-    var frontier = spark.range(1)
+    val start = spark.range(1)
       .select(lit(srcId).as("last"), array(lit(srcId)).as("path"))
       .localCheckpoint(true)
-    val empty = frontier.filter(lit(false)).localCheckpoint(true)
-    var out = empty
-    var step = 0
-    while (step < maxLen && !frontier.isEmpty) {
-      step += 1
-      val ext = frontier
+    Rounds.frontier(start.filter(lit(false)), start, maxLen) { (_, frontier, _) =>
+      frontier.filter(col("last") =!= dstId)
         .join(e.withColumnRenamed("src", "last"), Seq("last"))
         .filter(!array_contains(col("path"), col("dst")))
         .select(col("dst").as("last"),
           concat(col("path"), array(col("dst"))).as("path"))
-        .localCheckpoint(true)
-      val n = ext.count()
-      if (n > maxFrontier) throw new IllegalStateException(
-        s"enumPaths: frontier $n exceeds maxFrontier=$maxFrontier at " +
-          s"step $step — raise the bound or lower maxLen")
-      out = out.unionAll(ext.filter(col("last") === dstId))
-        .localCheckpoint(true)
-      frontier = ext.filter(col("last") =!= dstId)
-    }
-    out.select(
+    } { (out, r) =>
+      if (r.size > maxFrontier) throw new IllegalStateException(
+        s"enumPaths: frontier ${r.size} exceeds maxFrontier=$maxFrontier at " +
+          s"step ${r.index} — raise the bound or lower maxLen")
+      out.unionAll(r.rows.filter(col("last") === dstId))
+    }.select(
       array_join(col("path").cast("array<string>"), ",").as("path"),
       (size(col("path")) - 1).cast("long").as("n_hops"))
   }
@@ -2113,8 +2099,8 @@ object Graphs {
    * d_fwd(v) + d_bwd(v) = D, and then exactly σ(v)·τ(v) of them pass
    * through it. Both sweeps are level-synchronous: per level ONE keyed
    * equi-join of the frontier against the edges + ONE partial-aggregated
-   * sum + one settled anti-join — frontier-proportional work, the
-   * [[bfs]] discipline. All counts are integers; products run in
+   * sum + one settled anti-join — frontier-proportional work, run by
+   * [[Rounds.frontier]] as [[bfs]] is. All counts are integers; products run in
    * decimal(38,0) (path counts multiply fast), so the row set is
    * engine-exact at any partitioning.
    *
@@ -2137,25 +2123,18 @@ object Graphs {
     def sweep(root: Long, fwd: Boolean): DataFrame = {
       val step = if (fwd) e else e.select(col("dst").as("src"),
         col("src").as("dst"))
-      var acc = spark.range(1).select(lit(root).as("id"), lit(0).as("d"),
+      val acc0 = spark.range(1).select(lit(root).as("id"), lit(0).as("d"),
         lit(BigDecimal(1)).cast("decimal(38,0)").as("sigma"))
         .localCheckpoint(true)
-      var frontier = acc
-      var d = 0
-      while (d < maxHops && !frontier.isEmpty) {
-        d += 1
-        val next = frontier
+      Rounds.frontier(acc0, acc0, maxHops) { (acc, frontier, d) =>
+        frontier
           .join(step.withColumnRenamed("src", "id"), Seq("id"))
           .groupBy(col("dst").as("__id"))
           .agg(sum(col("sigma")).cast("decimal(38,0)").as("sigma"))
           .withColumnRenamed("__id", "id")
           .join(acc.select(col("id")), Seq("id"), "left_anti")
           .select(col("id"), lit(d).as("d"), col("sigma"))
-          .localCheckpoint(true)
-        acc = acc.unionAll(next).localCheckpoint(true)
-        frontier = next
-      }
-      acc
+      }((acc, r) => acc.unionAll(r.rows))
     }
 
     val f = sweep(srcId, fwd = true)

@@ -318,32 +318,6 @@ object Temporal {
         (col("top.t") - col("top.t0")).as("convert_micros"))
   }
 
-  private def driverEarliestReach(spark: org.apache.spark.sql.SparkSession,
-                                  edges: Array[(Long, Long, Long)],
-                                  seedIds: Array[Long], startTs: Long,
-                                  maxHops: Int): DataFrame = {
-    import spark.implicits._
-    val adj = edges.groupBy(_._1).map { case (s, es) => s -> es.map(e => (e._2, e._3)) }
-    val arr = scala.collection.mutable.HashMap.empty[Long, Long]
-    var frontier = seedIds.distinct.toSeq
-    frontier.foreach(arr(_) = startTs)
-    var h = 0
-    while (h < maxHops && frontier.nonEmpty) {
-      h += 1
-      val improved = scala.collection.mutable.HashMap.empty[Long, Long]
-      frontier.foreach { u =>
-        adj.getOrElse(u, Array.empty[(Long, Long)]).foreach { case (v, ts) =>
-          if (ts >= arr(u) && ts < arr.getOrElse(v, Long.MaxValue) &&
-              ts < improved.getOrElse(v, Long.MaxValue)) improved(v) = ts
-        }
-      }
-      val real = improved.filter { case (v, t) => t < arr.getOrElse(v, Long.MaxValue) }
-      real.foreach { case (v, t) => arr(v) = t }
-      frontier = real.keys.toSeq
-    }
-    arr.toSeq.toDF("id", "arrival")
-  }
-
   /**
    * TIME-RESPECTING REACHABILITY (earliest-arrival): over a temporal edge
    * list (src, dst, ts) — each edge usable only AT its timestamp — the
@@ -365,11 +339,10 @@ object Temporal {
    * All comparisons are Long microseconds; min is order-free, so the
    * result is engine-exact at any partitioning.
    *
-   * Distributed loop (the [[graft.kg.Graphs.sssp]] discipline): per round
-   * ONE keyed equi-join of the improved frontier against the edge list
-   * (ts-filtered), ONE map-side-partial min per target, strict-improvement
-   * anti-filter, `localCheckpoint` keeping the plan flat; early exit on an
-   * empty frontier. Work per round is the frontier's out-edges, never the
+   * Distributed loop: [[graft.kg.Graphs.sssp]]'s frontier relaxation
+   * (`Graphs.relaxation` over `graft.core.Rounds`) with candidate ts over
+   * the edges with ts >= arrival(u); early exit on an empty frontier.
+   * Work per round is the frontier's out-edges, never the
    * graph. Adaptive driver fallback below `smallGraphThreshold` edges;
    * the distributed loop is the scale path, equality-tested at
    * threshold 0 (TemporalReachSpec).
@@ -393,32 +366,12 @@ object Temporal {
       .distinct()
     val seedIds = seeds.select(col("id").cast("long")).distinct()
     graft.core.Adaptive.small(edges, smallGraphThreshold)(rows =>
-      driverEarliestReach(edgesIn.sparkSession,
+      Graphs.driverRelaxation(edgesIn.sparkSession,
         rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))),
-        seedIds.collect().map(_.getLong(0)), startTs, maxHops)) { edges =>
-      val e = edges.repartition(col("src")).localCheckpoint(true)
-      var arr = seedIds.withColumn("arrival", lit(startTs)).localCheckpoint(true)
-      var frontier = arr
-      var h = 0
-      var done = false
-      while (h < maxHops && !done) {
-        h += 1
-        val cand = frontier.withColumnRenamed("id", "src")
-          .join(e, Seq("src"))
-          .filter(col("ts") >= col("arrival"))
-          .select(col("dst").as("id"), col("ts").as("cand"))
-          .groupBy(col("id")).agg(min(col("cand")).as("cand"))
-        val improved = cand.join(arr, Seq("id"), "left")
-          .filter(col("arrival").isNull || col("cand") < col("arrival"))
-          .select(col("id"), col("cand").as("arrival")).localCheckpoint(true)
-        if (improved.isEmpty) done = true
-        else {
-          arr = arr.join(improved.select(col("id")), Seq("id"), "left_anti")
-            .unionAll(improved).localCheckpoint(true)
-          frontier = improved
-        }
-      }
-      arr
+        seedIds.collect().map(_.getLong(0)), startTs, maxHops, "arrival")(
+        (arrival, ts) => if (ts >= arrival) ts else Long.MaxValue)) { edges =>
+      Graphs.relaxation(edges, seedIds.withColumn("arrival", lit(startTs)), "arrival",
+        maxHops, col("ts"), usable = col("ts") >= col("arrival"))
     }
   }
 }

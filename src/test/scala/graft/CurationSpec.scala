@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.graftbridge.BusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 class CurationSpec extends SparkSpec {
 
@@ -77,17 +76,7 @@ class CurationSpec extends SparkSpec {
 
   test("one runAndWrite runs fewer jobs than the join-based chain") {
     val sf = "/root/testdata/sf0.01"
-    def jobsOf(f: => Unit): Int = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger()
-      val listener = new SparkListener {
-        override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-      }
-      BusDrain.drain(spark.sparkContext)
-      spark.sparkContext.addSparkListener(listener)
-      try { f; BusDrain.drain(spark.sparkContext) }
-      finally spark.sparkContext.removeSparkListener(listener)
-      jobs.get
-    }
+    def jobsOf(f: => Unit): Int = BusDrain.jobsOf(spark.sparkContext)(f)
     def fresh() = java.nio.file.Files.createTempDirectory("curation-jobs").toString + "/out"
     val chain = jobsOf(Curation.runAndWrite(spark, sf, fresh()))
     val joinBased = jobsOf {
@@ -99,5 +88,15 @@ class CurationSpec extends SparkSpec {
     // job and checkpoint, and two annotation joins)
     assert(chain <= 40, s"runAndWrite ran $chain jobs (join-based chain: $joinBased)")
     assert(joinBased > 40, s"join-based chain ran $joinBased jobs")
+  }
+
+  test("a non-positive budget is rejected before any Spark job") {
+    val root = java.nio.file.Files.createTempDirectory("curation-budget").toString + "/out"
+    val jobs = BusDrain.jobsOf(spark.sparkContext) {
+      intercept[IllegalArgumentException] {
+        Curation.runAndWrite(spark, "/root/testdata/sf0.01", root, 0L)
+      }
+    }
+    assert(jobs == 0, s"$jobs jobs ran before the budget check")
   }
 }

@@ -4,7 +4,8 @@
 Prints two things, run from any directory:
 
   1. the code lines of src/main/**/*.scala: every line that is not blank
-     and does not start (after indentation) with //, /* or *;
+     and does not start (after indentation) with //, /* or *; then the
+     same count for each main file, largest first;
   2. every main `def` (not `override def`) whose name appears under
      src/test but in no other main file, no file under kgbench/ and no
      file under tools/. A def called only from inside its own file is
@@ -51,8 +52,10 @@ def idents(text):
 def main():
     main_files = list(files_under("src/main", (".scala",)))
     texts = {p: read(p) for p in main_files}
-    code_lines = sum(is_code(l) for t in texts.values() for l in t.splitlines())
-    print(f"src/main code lines (non-blank, non-comment): {code_lines}")
+    per_file = {p: sum(is_code(l) for l in t.splitlines()) for p, t in texts.items()}
+    print(f"src/main code lines (non-blank, non-comment): {sum(per_file.values())}")
+    for p, n in sorted(per_file.items(), key=lambda kv: (-kv[1], kv[0])):
+        print(f"  {n:6d} {os.path.relpath(p, ROOT)}")
 
     main_ids = {p: idents(t) for p, t in texts.items()}
     test_ids = set().union(*(idents(read(p)) for p in files_under("src/test")))
