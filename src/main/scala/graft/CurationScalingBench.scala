@@ -17,72 +17,44 @@ import org.apache.spark.sql.functions._
 object CurationScalingBench {
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val copies = sys.env.getOrElse("SPARK_GRAFT_COPIES", "8").toInt
-    val levels = sys.env.getOrElse("SPARK_GRAFT_LEVELS", "4,16").split(",").map(_.trim.toInt).toSeq
-    require(levels.size == 2 && levels(1) == 4 * levels(0), "levels must be N,4N")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val results = levels.map { n => n -> runAt(n, sfDir, copies, reps) }.toMap
-    val (dLo, sLo) = results(levels(0))
-    val (dHi, sHi) = results(levels(1))
-    val eff = (dHi / dLo) / 4.0
-    val (lo, hi) = (s"local${levels(0)}", s"local${levels(1)}")
-    println(
-      s"""{"metric":"curation_scaling_efficiency","value":${f"$eff%.4f"},"unit":"ratio",""" +
-      s""""docs_per_sec":{"$lo":${f"$dLo%.2f"},"$hi":${f"$dHi%.2f"}},""" +
-      s""""seconds":{"$lo":${f"$sLo%.2f"},"$hi":${f"$sHi%.2f"}},""" +
-      s""""sf":"$sfDir","copies":$copies}""")
+    val p = Scaling.params(sys.env, sfDir = "/root/testdata/sf0.1", levels = "4,16")
+    println(Scaling.run("curation_scaling_efficiency", "graft-curation-scaling", p)(runAt(_, _, p)))
   }
 
-  /** @return (docs/sec, best elapsed seconds) over `reps` in-process reps. */
-  def runAt(cores: Int, sfDir: String, copies: Int, reps: Int): (Double, Double) = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-curation-scaling-$cores")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try {
-      import spark.implicits._
-      val base = spark.read.parquet(s"$sfDir/documents.parquet")
-      val step = base.agg(max(col("doc_id"))).head().getLong(0) + 1L
-      val docs = base
-        .crossJoin(spark.range(copies).select(col("id").as("copy")))
-        .select((col("doc_id") + col("copy") * step).as("doc_id"),
-          // each copy PERMUTES the doc's tokens deterministically (sort by
-          // xxhash64(copy, position)). This keeps every quality counter
-          // identical (same token multiset -> same stopword/length ratios,
-          // so the replicas flow through the whole chain instead of dying
-          // at the quality filter, which token-MUTATING schemes trip) while
-          // destroying shingle overlap (a one-token change would leave
-          // cross-copy Jaccard near 1.0 and collapse the corpus into
-          // copy-wide near-dup mega-clusters whose connected components
-          // serialize on the driver — the pathology, not the chain)
-          when(col("copy") === 0, col("text"))
-            .otherwise(array_join(
-              transform(
-                array_sort(
-                  transform(split(col("text"), " "),
-                    (x, i) => struct(
-                      xxhash64(concat(col("copy"), lit(":"), i)).as("k"),
-                      x.as("t")))),
-                s => s.getField("t")),
-              " ")).as("text"),
-          col("lang"), col("source"), col("n_chars"))
-        .repartition(cores * 4)
-        .persist()
-      val nDocs = docs.count()
-      val best = (1 to math.max(1, reps)).map { _ =>
-        val t0 = System.nanoTime()
-        val (out, _) = Curation.curatedWithCounts(docs, budget = 512L)
-        out.count()
-        (System.nanoTime() - t0) / 1e9
-      }.min
-      docs.unpersist()
-      (nDocs / best, best)
-    } finally spark.stop()
+  /** One level: docs per best rep of the curation chain. */
+  def runAt(spark: SparkSession, cores: Int, p: Scaling.Params): Scaling.Level = {
+    val base = spark.read.parquet(s"${p.sfDir}/documents.parquet")
+    val step = base.agg(max(col("doc_id"))).head().getLong(0) + 1L
+    val docs = base
+      .crossJoin(spark.range(p.copies).select(col("id").as("copy")))
+      .select((col("doc_id") + col("copy") * step).as("doc_id"),
+        // each copy PERMUTES the doc's tokens deterministically (sort by
+        // xxhash64(copy, position)). This keeps every quality counter
+        // identical (same token multiset -> same stopword/length ratios,
+        // so the replicas flow through the whole chain instead of dying
+        // at the quality filter, which token-MUTATING schemes trip) while
+        // destroying shingle overlap (a one-token change would leave
+        // cross-copy Jaccard near 1.0 and collapse the corpus into
+        // copy-wide near-dup mega-clusters whose connected components
+        // serialize on the driver — the pathology, not the chain)
+        when(col("copy") === 0, col("text"))
+          .otherwise(array_join(
+            transform(
+              array_sort(
+                transform(split(col("text"), " "),
+                  (x, i) => struct(
+                    xxhash64(concat(col("copy"), lit(":"), i)).as("k"),
+                    x.as("t")))),
+              s => s.getField("t")),
+            " ")).as("text"),
+        col("lang"), col("source"), col("n_chars"))
+      .repartition(cores * 4)
+      .persist()
+    val nDocs = docs.count()
+    val (_, secs) = Scaling.bestOf(s"local[$cores] curation", p.reps) {
+      Curation.curatedWithCounts(docs, budget = 512L)._1.count()
+    }
+    docs.unpersist()
+    Scaling.Level(Seq("docs" -> nDocs), secs)
   }
 }
