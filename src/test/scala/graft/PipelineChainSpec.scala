@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.graftbridge.BusDrain
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 import graft.core.TableIO
@@ -40,7 +41,7 @@ class PipelineChainSpec extends SparkSpec {
   }
 
   test("reset unpersists every cached Dataset; resetDatasets keeps the model registry") {
-    def board(): Seq[org.apache.spark.sql.Dataset[_]] = Seq(Pipeline.taggedSentences(spark, sf),
+    def board(): Seq[Dataset[_]] = Seq(Pipeline.taggedSentences(spark, sf),
       Pipeline.aliasDict(spark, sf), Pipeline.canonMap(spark, sf), Pipeline.triples(spark, sf))
     Pipeline.reset()
     val cached = board()
