@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.util.{CollectionAccumulator, LongAccumulator}
 import scala.collection.concurrent.TrieMap
@@ -13,10 +14,19 @@ import graft.kg.Triples
 /**
  * End-to-end KG-construction wiring (north_star):
  * pages -> extract/sentences -> language-routed NER -> mentions
- *   -> alias-dict linking (broadcast or salted) -> connected-component
- *   canonicalization -> (subj, pred, obj) triples partitioned by lang.
+ *   -> alias-dict linking -> connected-component canonicalization
+ *   -> (subj, pred, obj) triples partitioned by lang.
  *
- * The per-document part of that chain is written once, as [[Chain]]; the
+ * Everything the chain needs before tagging comes from one read of the
+ * pages and one aggregate job ([[Prep]]): a single explode of every token
+ * emits its characters and lowercased form (the per-language model
+ * vocabularies) and its alias surface, keyed by (kind, lang, key). The
+ * driver builds the models, the alias dictionary, its connected components
+ * (union-find over the dictionary's alias edges) and one alias -> canonical
+ * entity map from the collected aggregate; linking is one lookup in that
+ * map's broadcast, not a join.
+ *
+ * The per-document part of the chain is written once, as [[Chain]]; the
  * board (`taggedSentences`, `triples`), `runAndWrite` and `ScalingBench`
  * all run it. Its NER stage is salted-repartitioned to one width,
  * `max(2 * defaultParallelism, 4)` ([[nerWidth]]): inference is the chain's
@@ -25,13 +35,13 @@ import graft.kg.Triples
  * language bucket overlap with the rest.
  *
  * The board's materialized views live in one memo keyed by stage name and
- * input; the stage names are the ones kgbench's spans use. They keep the
- * one-time model-prep jobs (vocab builds, dictionary, connected components)
- * and the NER pass from re-running for every query in a session.
+ * input; the stage names are the ones kgbench's spans use, plus `prep`.
+ * They keep the one-time model prep and the NER pass from re-running for
+ * every query in a session.
  */
 object Pipeline {
 
-  /** (stage, input) -> the model registry, a persisted Dataset, or a board
+  /** (stage, input) -> the [[Prep]], a persisted Dataset, or a board
     * [[Chain]] whose `tagged` is persisted. */
   private val views = TrieMap.empty[(String, Any), AnyRef]
 
@@ -51,22 +61,53 @@ object Pipeline {
   def sentences(spark: SparkSession, sfDir: String): Dataset[Sentence] =
     NerStage.sentences(pages(spark, sfDir))
 
-  /** Deterministic per-language models, built once per (process, sfDir).
-    * SPARK_GRAFT_MODEL_DIR=<dir> loads a saved registry (the trained-model
-    * deployment path — graft.ner.ModelStore, S5 checkpoint parity);
-    * SPARK_GRAFT_MODEL=reference selects the reference's own hyperparameters
-    * (NeuralNERMono/NeuralNER.py:67-75: hidden 200, embed 300, filters 35,
-    * widths 3-7); default is a small serving config for fast verification. */
-  def models(spark: SparkSession, sfDir: String): Map[String, Models.LangModel] =
-    memo("ner.models", sfDir) {
-      sys.env.get("SPARK_GRAFT_MODEL_DIR") match {
-        case Some(dir) => graft.ner.ModelStore.load(dir)
-        case None if sys.env.get("SPARK_GRAFT_MODEL").contains("reference") =>
-          Models.build(spark, sentences(spark, sfDir),
-            embedDim = 300, numFilters = 35, minWidth = 3, maxWidth = 7, hidden = 200)
-        case None => Models.build(spark, sentences(spark, sfDir))
-      }
+  /**
+   * What the chain needs before tagging, all held on the driver: the
+   * per-language model registry, the alias dictionary rows (alias,
+   * entity_id, prior), the canonical map rows (id, component) and the alias
+   * -> canonical entity map that linking looks up.
+   */
+  private[graft] final case class Prep(
+      models: Map[String, Models.LangModel],
+      dict: Seq[(String, Long, Double)],
+      canon: Seq[(Long, Long)],
+      links: Map[String, Long])
+
+  /** [[Prep]] of a corpus from one aggregate job over its sentences
+    * (`Models.units` with alias units): the models as `Models.build` builds
+    * them, the dictionary as `EntityLink.aliasDict` builds it over every
+    * token, the canonical map as `ConnectedComponents.run` labels
+    * `Triples.aliasEdges` of it (the driver union-find, as for any graph
+    * that small), and `Triples.linkMap` of the two.
+    *
+    * SPARK_GRAFT_MODEL_DIR=<dir> loads a saved registry instead (the
+    * trained-model deployment path — graft.ner.ModelStore, S5 checkpoint
+    * parity); SPARK_GRAFT_MODEL=reference selects the reference's own
+    * hyperparameters (NeuralNERMono/NeuralNER.py:67-75: hidden 200, embed
+    * 300, filters 35, widths 3-7); default is a small serving config for
+    * fast verification. */
+  private[graft] def prepare(sentences: Dataset[Sentence]): Prep = {
+    val units = Models.units(Models.positionedTokens(sentences), aliases = true)
+    val models = sys.env.get("SPARK_GRAFT_MODEL_DIR") match {
+      case Some(dir) => graft.ner.ModelStore.load(dir)
+      case None if sys.env.get("SPARK_GRAFT_MODEL").contains("reference") =>
+        Models.fromUnits(units, embedDim = 300, numFilters = 35, minWidth = 3, maxWidth = 7, hidden = 200)
+      case None => Models.fromUnits(units)
     }
+    val dict = units.iterator.filter(_.kind == Models.AliasUnit)
+      .flatMap(u => EntityLink.candidates(u.key)).toSeq
+    val canon = ConnectedComponents.driverUnionFind(Triples.aliasEdges(dict))
+    Prep(models, dict, canon, Triples.linkMap(dict, canon))
+  }
+
+  /** [[prepare]] over every page of `sfDir`, once per (process, sfDir). It
+    * holds no Dataset, so `resetDatasets` keeps it. */
+  private def prep(spark: SparkSession, sfDir: String): Prep =
+    memo("prep", sfDir)(prepare(sentences(spark, sfDir)))
+
+  /** Deterministic per-language models of every page of `sfDir` ([[Prep]]). */
+  def models(spark: SparkSession, sfDir: String): Map[String, Models.LangModel] =
+    prep(spark, sfDir).models
 
   /** Partitions of the chain's NER stage (see the object's scaladoc). */
   private[graft] def nerWidth(spark: SparkSession): Int =
@@ -75,26 +116,34 @@ object Pipeline {
   /**
    * The per-document KG chain over `pages`: sentences -> salted repartition
    * to [[nerWidth]] -> language-routed NER with `sfDir`'s [[models]] (feeding
-   * the optional run metrics) -> surface triples -> linked, canonical
-   * triples over `sfDir`'s [[aliasDict]] and [[canonMap]]. Nothing here is
-   * materialized: the board persists `tagged`, `runAndWrite` streams
+   * the optional run metrics) -> surface triples -> canonical triples
+   * through `sfDir`'s alias -> canonical entity map ([[Prep]]). Nothing here
+   * is materialized: the board persists `tagged`, `runAndWrite` streams
    * `triples` into its write. `triples` is built on first use, so a caller
-   * that reads only `tagged` runs no linking or canonicalization job.
+   * that reads only `tagged` broadcasts no lexicon or map. `release`
+   * destroys the chain's broadcasts, for a caller done with its rows.
    */
   private[graft] final class Chain(spark: SparkSession, sfDir: String, pages: Dataset[Page],
       useViterbi: Boolean = false,
       lineage: Option[CollectionAccumulator[LineageRow]] = None,
       tokenCounter: Option[LongAccumulator] = None,
       oovCounter: Option[LongAccumulator] = None) {
+    private val broadcasts = scala.collection.mutable.ArrayBuffer.empty[Broadcast[_]]
+    private def broadcast[T: scala.reflect.ClassTag](value: T): Broadcast[T] = {
+      val b = spark.sparkContext.broadcast(value)
+      broadcasts += b
+      b
+    }
     val tagged: Dataset[SentenceNer] = {
       val w = nerWidth(spark)
       NerStage.tag(NerStage.saltedRepartition(NerStage.sentences(pages), w, w),
-        spark.sparkContext.broadcast(models(spark, sfDir)), useViterbi,
+        broadcast(models(spark, sfDir)), useViterbi,
         lineage = lineage, tokenCounter = tokenCounter, oovCounter = oovCounter)
     }
     lazy val triples: Dataset[Triple] = Triples.canonicalTriples(
-      NerStage.rawTriples(tagged, spark.sparkContext.broadcast(NerStage.defaultPredicateLexicon)),
-      aliasDict(spark, sfDir), canonMap(spark, sfDir))
+      NerStage.rawTriples(tagged, broadcast(NerStage.defaultPredicateLexicon)),
+      broadcast(prep(spark, sfDir).links))
+    def release(): Unit = broadcasts.foreach(_.destroy())
   }
 
   /** The board's chain over every page, its tagged sentences persisted per
@@ -114,19 +163,20 @@ object Pipeline {
   def mentions(spark: SparkSession, sfDir: String): Dataset[Mention] =
     NerStage.mentions(taggedSentences(spark, sfDir))
 
-  /** Alias dictionary derived from the corpus token universe (cached). */
+  /** Alias dictionary (alias, entity_id, prior) of the corpus token
+    * universe, from [[Prep]]'s rows (persisted). */
   def aliasDict(spark: SparkSession, sfDir: String): DataFrame =
     memo("link.alias_dict", sfDir) {
       import spark.implicits._
-      val surfaces = sentences(spark, sfDir).flatMap(_.tokens).distinct()
-      EntityLink.aliasDict(spark, surfaces).persist()
+      prep(spark, sfDir).dict.toDF("alias", "entity_id", "prior").persist()
     }
 
-  /** Canonical map: connected components over the dictionary's alias edges
-    * (cached — it's a model-prep artifact, same at every query). */
+  /** Canonical map (id, component): connected components over the
+    * dictionary's alias edges, from [[Prep]]'s rows (persisted). */
   def canonMap(spark: SparkSession, sfDir: String): DataFrame =
     memo("canon.cc", sfDir) {
-      ConnectedComponents.run(Triples.aliasEdges(aliasDict(spark, sfDir))).persist()
+      import spark.implicits._
+      prep(spark, sfDir).canon.toDF("id", "component").persist()
     }
 
   /** The materialized KG, persisted once per (process, sfDir) — the
@@ -162,7 +212,8 @@ object Pipeline {
     val pending = pages(spark, sfDir).filter(p => !done.contains(p.lang))
     val chain = new Chain(spark, sfDir, pending, useViterbi, lineage = Some(lineage),
       tokenCounter = Some(tokensSeen), oovCounter = Some(unknownWords))
-    val written = TableIO.writeResumable(chain.triples.toDF(), outRoot, "lang")
+    val written = try TableIO.writeResumable(chain.triples.toDF(), outRoot, "lang")
+      finally chain.release()
     // a rerun over committed partitions still reports its (empty) NER
     // partitions; lineage describes work done, so such a run writes none
     val reported = scala.jdk.CollectionConverters.ListHasAsScala(lineage.value).asScala.toSeq
@@ -178,7 +229,8 @@ object Pipeline {
   }
 
   /** Forget the session-bound views but keep the (session-independent)
-    * model registry — used between benchmark sessions with different
-    * masters, whose Datasets need no unpersist once their session stopped. */
+    * [[Prep]] with its model registry — used between benchmark sessions
+    * with different masters, whose Datasets need no unpersist once their
+    * session stopped. */
   def resetDatasets(): Unit = views.filterInPlace((_, v) => persisted(v).isEmpty)
 }

@@ -51,8 +51,9 @@ object ScalingBench {
       .persist()
     val nDocs = phase("pages")(pages.count())
     // ---- timed region: the per-document chain ----
-    val triples = new Pipeline.Chain(spark, p.sfDir, pages).triples
-    val (nTriples, secs) = Scaling.bestOf(s"local[$cores] pipeline", p.reps)(triples.count())
+    val chain = new Pipeline.Chain(spark, p.sfDir, pages)
+    val (nTriples, secs) = try Scaling.bestOf(s"local[$cores] pipeline", p.reps)(chain.triples.count())
+      finally chain.release()
     pages.unpersist()
     Pipeline.resetDatasets()
     Scaling.Level(Seq("docs" -> nDocs, "triples" -> nTriples), secs)

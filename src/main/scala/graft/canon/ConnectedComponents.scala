@@ -1,6 +1,6 @@
 package graft.canon
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.Adaptive
 
@@ -81,7 +81,9 @@ object ConnectedComponents {
     val simple = edgesIn.select(col("src").cast("long"), col("dst").cast("long"))
       .filter(col("src") =!= col("dst")).distinct()
     Adaptive.small(simple, smallGraphThreshold) { rows =>
-      runDriverUnionFind(edgesIn.sparkSession, Adaptive.pairs(rows))
+      val spark = edgesIn.sparkSession
+      import spark.implicits._
+      driverUnionFind(Adaptive.pairs(rows)).toDF("id", "component")
     } { e0 =>
       var edges = e0
       var iter = 0
@@ -114,9 +116,9 @@ object ConnectedComponents {
     * the MIN node id — computed per root afterwards, so the union
     * heuristic is free to pick either root. Same labeling contract as the
     * distributed path; chain-at-threshold exercised in
-    * ConnectedComponentsSpec. */
-  private def runDriverUnionFind(spark: SparkSession, pairs: Array[(Long, Long)]): DataFrame = {
-    import spark.implicits._
+    * ConnectedComponentsSpec. Returns (id, component) for every node of
+    * `pairs`. */
+  private[graft] def driverUnionFind(pairs: Array[(Long, Long)]): Seq[(Long, Long)] = {
     val parent = scala.collection.mutable.HashMap.empty[Long, Long]
     val sz = scala.collection.mutable.HashMap.empty[Long, Int]
     def find(x: Long): Long = {
@@ -138,7 +140,7 @@ object ConnectedComponents {
     }
     val nodes = pairs.iterator.flatMap(e => Iterator(e._1, e._2)).toArray.distinct
     val compMin = nodes.groupBy(find).map { case (root, ns) => root -> ns.min }
-    nodes.toSeq.map(id => (id, compMin(find(id)))).toDF("id", "component")
+    nodes.toSeq.map(id => (id, compMin(find(id))))
   }
 
   /** Order-insensitive multiset fingerprint of the edge set (sum of row

@@ -51,11 +51,13 @@ object CorpusGen {
     toks.grouped(12).map(_.mkString(" ")).mkString("\n")
   }
 
-  /** Build the pages table from `documents.parquet` under `sfDir`. */
+  /** Build the pages table from `documents.parquet` under `sfDir`. The
+    * read names the four columns it uses and their types, so Spark runs no
+    * job to infer the file's schema. */
   def pages(spark: SparkSession, sfDir: String): Dataset[Page] = {
     import spark.implicits._
-    spark.read.parquet(s"$sfDir/documents.parquet")
-      .select("doc_id", "text", "lang", "source")
+    spark.read.schema("doc_id BIGINT, text STRING, lang STRING, source STRING")
+      .parquet(s"$sfDir/documents.parquet")
       .as[(Long, String, String, String)]
       .map { case (id, text, lang, source) =>
         val html = htmlFor(id, text, lang, source)

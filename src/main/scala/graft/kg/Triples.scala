@@ -1,5 +1,6 @@
 package graft.kg
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Triple
@@ -13,35 +14,48 @@ import graft.ner.RawTriple
  */
 object Triples {
 
-  /** Surface triples -> entity triples: two broadcast joins (subj/obj alias
-    * -> entity id, top candidate by prior) + canonical-id mapping. */
+  /** Surface triples -> canonical entity triples through the alias ->
+    * canonical entity map of `dict` (alias, entity_id, prior) and `canonMap`
+    * (id, component), built by [[linkMap]] from the two tables' collected
+    * rows and shipped in one broadcast, which Spark's ContextCleaner
+    * releases once the returned Dataset is unreachable. */
   def canonicalTriples(raw: Dataset[RawTriple], dict: DataFrame,
                        canonMap: DataFrame): Dataset[Triple] = {
     val spark = raw.sparkSession
     import spark.implicits._
-    // best entity per alias (deterministic top-1: max prior, min entity_id)
-    val best = dict.groupBy($"alias").agg(
-      max(struct($"prior", (-$"entity_id").as("neg"), $"entity_id")).as("b"))
-      .select($"alias", $"b.entity_id".as("entity_id"))
-    val canon = canonMap.select($"id", $"component")
-    val withIds = raw.toDF()
-      .withColumn("subj_alias", lower(split($"subjSurface", " ").getItem(0)))
-      .withColumn("obj_alias", lower(split($"objSurface", " ").getItem(0)))
-      .join(broadcast(best.withColumnRenamed("alias", "subj_alias")
-        .withColumnRenamed("entity_id", "subj_id")), Seq("subj_alias"), "inner")
-      .join(broadcast(best.withColumnRenamed("alias", "obj_alias")
-        .withColumnRenamed("entity_id", "obj_id")), Seq("obj_alias"), "inner")
-    withIds
-      .join(broadcast(canon.withColumnRenamed("id", "subj_id")
-        .withColumnRenamed("component", "subj_canon")), Seq("subj_id"), "left")
-      .join(broadcast(canon.withColumnRenamed("id", "obj_id")
-        .withColumnRenamed("component", "obj_canon")), Seq("obj_id"), "left")
-      .select(
-        coalesce($"subj_canon", $"subj_id").as("subj"),
-        $"pred",
-        coalesce($"obj_canon", $"obj_id").as("obj"),
+    val dictRows = dict.select($"alias", $"entity_id".cast("long"), $"prior".cast("double"))
+      .as[(String, Long, Double)].collect()
+    val canonRows = canonMap.select($"id".cast("long"), $"component".cast("long")).as[(Long, Long)].collect()
+    canonicalTriples(raw, spark.sparkContext.broadcast(linkMap(dictRows, canonRows)))
+  }
+
+  /** Surface triples -> canonical entity triples: the linking key of each
+    * surface (its head token, lowercased by Spark's `lower`) is looked up in
+    * `links`, an alias -> canonical entity map ([[linkMap]]); a triple with
+    * either key absent from the map is dropped. */
+  private[graft] def canonicalTriples(raw: Dataset[RawTriple],
+                                      links: Broadcast[Map[String, Long]]): Dataset[Triple] = {
+    val spark = raw.sparkSession
+    import spark.implicits._
+    val canonOf = udf { (alias: String) => Option(alias).flatMap(links.value.get).map(Long.box).orNull }
+    def key(surface: String) = lower(split(col(surface), " ").getItem(0))
+    raw.toDF()
+      .select(canonOf(key("subjSurface")).as("subj"), $"pred", canonOf(key("objSurface")).as("obj"),
         $"lang", $"url", $"sentIdx")
+      .filter($"subj".isNotNull && $"obj".isNotNull)
       .as[Triple]
+  }
+
+  /** Alias -> canonical entity: the alias's top candidate in `dict` (alias,
+    * entity_id, prior) — highest prior, then smallest entity_id — mapped
+    * through the `canon` labels (id, component); an unlabelled id is its own
+    * canonical entity. */
+  private[graft] def linkMap(dict: Iterable[(String, Long, Double)],
+                             canon: Iterable[(Long, Long)]): Map[String, Long] = {
+    val component = canon.toMap
+    dict.groupMapReduce(_._1)(r => (r._3, r._2)) { (a, b) =>
+      if (a._1 > b._1 || (a._1 == b._1 && a._2 <= b._2)) a else b
+    }.map { case (alias, (_, id)) => alias -> component.getOrElse(id, id) }
   }
 
   /** Alias-merge edges for canonicalization: entity(alias) <-> entity(stem)
@@ -52,6 +66,12 @@ object Triples {
       .filter(col("src") =!= col("dst"))
       .select(col("src"), col("dst"))
   }
+
+  /** [[aliasEdges]] of dictionary rows (alias, entity_id, prior) held on the
+    * driver, as (src, dst) pairs. */
+  private[graft] def aliasEdges(dict: Iterable[(String, Long, Double)]): Array[(Long, Long)] =
+    dict.groupMapReduce(_._1)(r => (r._2, r._2)) { (a, b) => (a._1 min b._1, a._2 max b._2) }
+      .values.filter { case (src, dst) => src != dst }.toArray
 
   /**
    * Mergeable KG fact table — the incremental-maintenance unit: one row

@@ -34,15 +34,20 @@ object EntityLink {
     surfaces
       .map(_.toLowerCase(java.util.Locale.ROOT))
       .distinct()
-      .flatMap { a =>
-        val cands = scala.collection.mutable.LinkedHashMap(a -> 1.0)
-        val st = stem(a)
-        if (!cands.contains(st)) cands(st) = 0.5
-        val pf = prefixStem(a)
-        if (!cands.contains(pf)) cands(pf) = 0.25
-        cands.iterator.map { case (c, prior) => (a, entityId(c), prior) }
-      }
+      .flatMap(candidates)
       .toDF("alias", "entity_id", "prior")
+  }
+
+  /** The dictionary rows (alias, entity_id, prior) of one lowercased alias:
+    * its own entity, then its stem's and its prefix stem's where they differ
+    * from the candidates before them. */
+  private[graft] def candidates(a: String): Iterator[(String, Long, Double)] = {
+    val cands = scala.collection.mutable.LinkedHashMap(a -> 1.0)
+    val st = stem(a)
+    if (!cands.contains(st)) cands(st) = 0.5
+    val pf = prefixStem(a)
+    if (!cands.contains(pf)) cands(pf) = 0.25
+    cands.iterator.map { case (c, prior) => (a, entityId(c), prior) }
   }
 
   def entityId(surface: String): Long =

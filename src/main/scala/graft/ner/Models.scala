@@ -48,8 +48,8 @@ object Models {
 
   /** Tokens with a lexicographically ordered position key: only the agg
     * (vocab-sized) output is ever collected, and it is sorted on the driver
-    * ([[firstOccurrences]]). One pass for ALL languages (lang is just
-    * another grouping column). */
+    * ([[units]]). One pass for ALL languages (lang is just another
+    * grouping column). */
   private[graft] def positionedTokens(sentences: Dataset[graft.core.Sentence]): DataFrame = {
     val spark = sentences.sparkSession
     import spark.implicits._
@@ -58,10 +58,21 @@ object Models {
       .toDF("lang", "url", "sentIdx", "tokIdx", "tok")
   }
 
-  /** One vocabulary entry: its language, its string, its first position
-    * (url, sentIdx, tokIdx, charIdx) and its number of occurrences. */
-  private final case class First(lang: String, key: String, url: String,
-                                 sentIdx: Int, tokIdx: Int, charIdx: Int, cnt: Long)
+  /** Unit kinds of [[units]]: a token's characters and its lowercased form
+    * (the vocabularies), and its alias surface (the alias dictionary). */
+  val CharUnit = 0
+  val WordUnit = 1
+  val AliasUnit = 2
+
+  /** One exploded unit of a token, before aggregation. */
+  final case class UnitKey(kind: Int, lang: String, charIdx: Int, key: String)
+
+  /** One aggregated unit: its kind, language and string, its first position
+    * (url, sentIdx, tokIdx, charIdx) and its number of occurrences. Not
+    * private: the projection Spark generates for the collect calls its
+    * constructor. */
+  final case class VocabUnit(kind: Int, lang: String, key: String, url: String,
+                             sentIdx: Int, tokIdx: Int, charIdx: Int, cnt: Long)
 
   /** Spark's ascending string order, which `orderBy` would use: binary
     * UTF-8, nulls first. `String.compareTo` compares UTF-16 code units and
@@ -70,18 +81,40 @@ object Models {
     if (a == null || b == null) java.lang.Boolean.compare(a != null, b != null)
     else a.compareTo(b)
 
-  /** Groups `units` (columns lang, key, url, sentIdx, tokIdx, charIdx) by
-    * (lang, key) and returns each group's first position and count in
-    * first-occurrence order: ascending (lang, first position, key). The
-    * aggregate is vocabulary-sized and the driver holds all of it after the
-    * collect anyway, so it is sorted there, which spares a distributed
-    * `orderBy` its range-partition sampling job and sort exchange. */
-  private def firstOccurrences(units: DataFrame): Seq[First] = {
-    val spark = units.sparkSession
+  /** A token's characters (per language) and, with `aliases`, its alias
+    * surface: lowercased as `EntityLink.aliasDict` lowercases, with the JVM's
+    * `toLowerCase(Locale.ROOT)`, and in no language ("") since the dictionary
+    * spans languages. */
+  private def udfUnits(aliases: Boolean) = udf { (lang: String, tok: String) =>
+    val chars = graft.text.TextExtract.codePoints(tok).iterator.zipWithIndex
+      .map { case (c, i) => UnitKey(CharUnit, lang, i, c) }.toSeq
+    if (aliases) chars :+ UnitKey(AliasUnit, "", 0, tok.toLowerCase(java.util.Locale.ROOT)) else chars
+  }
+
+  /**
+   * Every unit of every token in `positioned` (columns lang, url, sentIdx,
+   * tokIdx, tok), from one explode and one aggregate job: each character
+   * (charIdx its position in the token), the token lowercased by Spark's
+   * `lower` (charIdx 0) and, with `aliases`, its alias surface. Grouped by
+   * (kind, lang, key) with each group's first position and count, and
+   * returned in first-occurrence order: ascending (lang, first position,
+   * key) within each kind. The aggregate is vocabulary-sized and the driver
+   * holds all of it after the collect anyway, so it is sorted there, which
+   * spares a distributed `orderBy` its range-partition sampling job and sort
+   * exchange.
+   */
+  private[graft] def units(positioned: DataFrame, aliases: Boolean): Seq[VocabUnit] = {
+    val spark = positioned.sparkSession
     import spark.implicits._
-    val firsts = units.groupBy($"lang", $"key")
-      .agg(min(struct($"url", $"sentIdx", $"tokIdx", $"charIdx")).as("first"), count(lit(1)).as("cnt"))
-      .select($"lang", $"key", $"first.*", $"cnt").as[First].collect()
+    val word = struct(lit(WordUnit).as("kind"), $"lang".as("lang"), lit(0).as("charIdx"),
+      lower($"tok").as("key"))
+    val firsts = positioned
+      .select($"url", $"sentIdx", $"tokIdx",
+        explode(concat(udfUnits(aliases)($"lang", $"tok"), array(word))).as("u"))
+      .groupBy($"u.kind".as("kind"), $"u.lang".as("lang"), $"u.key".as("key"))
+      .agg(min(struct($"url", $"sentIdx", $"tokIdx", $"u.charIdx".as("charIdx"))).as("first"),
+        count(lit(1)).as("cnt"))
+      .select($"kind", $"lang", $"key", $"first.*", $"cnt").as[VocabUnit].collect()
     def u(s: String) = UTF8String.fromString(s)
     val order = Ordering.Tuple6(sparkStringOrder, sparkStringOrder, Ordering.Int, Ordering.Int,
       Ordering.Int, sparkStringOrder)
@@ -89,43 +122,29 @@ object Models {
       .sortBy(_._1)(order).map(_._2).toSeq
   }
 
-  /** Every character of every token, one row each, as [[firstOccurrences]] units. */
-  private def charUnits(positioned: DataFrame, byLang: Boolean): DataFrame = {
-    val spark = positioned.sparkSession
-    import spark.implicits._
-    positioned.select(if (byLang) $"lang" else lit("").as("lang"), $"url", $"sentIdx", $"tokIdx",
-      posexplode(udfCps($"tok")).as(Seq("charIdx", "key")))
-  }
+  /** Each language's keys of one unit kind in first-occurrence order. */
+  private def keysByLang(units: Seq[VocabUnit], kind: Int): Map[String, Seq[String]] =
+    units.filter(_.kind == kind).groupBy(_.lang).view.mapValues(_.map(_.key)).toMap
 
-  /** Every lowercased token, one row each, as [[firstOccurrences]] units. */
-  private def wordUnits(positioned: DataFrame, byLang: Boolean): DataFrame = {
-    val spark = positioned.sparkSession
-    import spark.implicits._
-    positioned.select(if (byLang) $"lang" else lit("").as("lang"), $"url", $"sentIdx", $"tokIdx",
-      lit(0).as("charIdx"), lower($"tok").as("key"))
-  }
-
-  /** Each language's keys in first-occurrence order. */
-  private def keysByLang(firsts: Seq[First]): Map[String, Seq[String]] =
-    firsts.groupBy(_.lang).view.mapValues(_.map(_.key)).toMap
+  /** `positioned`'s units over all languages together. */
+  private def unitsOfAll(positioned: DataFrame, kind: Int): Seq[VocabUnit] =
+    units(positioned.withColumn("lang", lit("")), aliases = false).filter(_.kind == kind)
 
   /** Distributed char-vocab build: characters of every token, indexed in
     * first-occurrence order (deterministic; equals the reference's
     * sequential readCoNLL order for the same row order). */
   def buildCharVocab(positioned: DataFrame): Vocab = {
     val v = Vocab.newCharVocab()
-    firstOccurrences(charUnits(positioned, byLang = false)).foreach(f => v.add(f.key))
+    unitsOfAll(positioned, CharUnit).foreach(f => v.add(f.key))
     v.freeze()
     v
   }
-
-  private val udfCps = udf { (tok: String) => graft.text.TextExtract.codePoints(tok) }
 
   /** Distributed word-frequency vocab (A1/A2 semantics: lowercased counts,
     * `trim` keeps count > threshold; vocab.py:61-81,169-184). */
   def buildWordVocab(positioned: DataFrame, trimThreshold: Long = -1L): Vocab = {
     val v = new Vocab(caseSensitive = false)
-    firstOccurrences(wordUnits(positioned, byLang = false)).foreach { f =>
+    unitsOfAll(positioned, WordUnit).foreach { f =>
       v.add(f.key); v.tokCounts(f.key) = f.cnt // set true corpus frequency
     }
     if (trimThreshold >= 0) v.trim(trimThreshold)
@@ -136,7 +155,7 @@ object Models {
   /** First-occurrence-ordered distinct lowercased tokens (embedding fixture
     * key order — load_embeddings is file-order first-wins). */
   def wordOrder(positioned: DataFrame): Array[String] =
-    firstOccurrences(wordUnits(positioned, byLang = false)).map(_.key).toArray
+    unitsOfAll(positioned, WordUnit).map(_.key).toArray
 
   /**
    * Build a deterministic model registry for the given languages from a
@@ -219,29 +238,35 @@ object Models {
   def build(spark: SparkSession, sentences: Dataset[graft.core.Sentence],
             embedDim: Int = 32, numFilters: Int = 8, minWidth: Int = 3,
             maxWidth: Int = 5, hidden: Int = 32, seed: Long = 42L,
+            tagVocabs: Map[String, Vocab] = Map.empty): Map[String, LangModel] =
+    fromUnits(units(positionedTokens(sentences), aliases = false),
+      embedDim, numFilters, minWidth, maxWidth, hidden, seed, tagVocabs)
+
+  /** [[build]] from an already collected [[units]] aggregate (its alias
+    * units, if any, are ignored). */
+  private[graft] def fromUnits(units: Seq[VocabUnit],
+            embedDim: Int = 32, numFilters: Int = 8, minWidth: Int = 3,
+            maxWidth: Int = 5, hidden: Int = 32, seed: Long = 42L,
             tagVocabs: Map[String, Vocab] = Map.empty): Map[String, LangModel] = {
     val sharedTv = tagVocab()
-    val positioned = positionedTokens(sentences).persist()
-    try {
-      val charOrders = keysByLang(firstOccurrences(charUnits(positioned, byLang = true)))
-      val wordOrders = keysByLang(firstOccurrences(wordUnits(positioned, byLang = true)))
-      charOrders.keys.toSeq.sorted.map { lg =>
-        // per-language tag space when provided (Yang's aux tag vocab,
-        // NeuralNERYang/NeuralNERYang.py:63-64,106,157; NoOutput's
-        // per-language tag vocabs, NeuralNERAllShared/models/modules.py:278-284);
-        // the fixed IOBES vocab otherwise — the output layer is sized to it
-        val tv = tagVocabs.getOrElse(lg, sharedTv)
-        val charV = Vocab.newCharVocab()
-        charOrders(lg).foreach(charV.add)
-        charV.freeze()
-        val lines = Embeddings.syntheticLines(wordOrders(lg).toIndexedSeq, embedDim,
-          seed ^ Embeddings.fnv1a(lg))
-        val loaded = Embeddings.fromLines(lines.iterator)
-        val inputV = Embeddings.toInputVocab(loaded)
-        val w = Kernel.randomWeights(embedDim, minWidth, maxWidth, numFilters, hidden,
-          charV.size, tv.size, loaded.matrix, seed ^ Embeddings.fnv1a("weights:" + lg))
-        lg -> LangModel(lg, inputV, charV, tv, w)
-      }.toMap
-    } finally positioned.unpersist()
+    val charOrders = keysByLang(units, CharUnit)
+    val wordOrders = keysByLang(units, WordUnit)
+    charOrders.keys.toSeq.sorted.map { lg =>
+      // per-language tag space when provided (Yang's aux tag vocab,
+      // NeuralNERYang/NeuralNERYang.py:63-64,106,157; NoOutput's
+      // per-language tag vocabs, NeuralNERAllShared/models/modules.py:278-284);
+      // the fixed IOBES vocab otherwise — the output layer is sized to it
+      val tv = tagVocabs.getOrElse(lg, sharedTv)
+      val charV = Vocab.newCharVocab()
+      charOrders(lg).foreach(charV.add)
+      charV.freeze()
+      val lines = Embeddings.syntheticLines(wordOrders(lg).toIndexedSeq, embedDim,
+        seed ^ Embeddings.fnv1a(lg))
+      val loaded = Embeddings.fromLines(lines.iterator)
+      val inputV = Embeddings.toInputVocab(loaded)
+      val w = Kernel.randomWeights(embedDim, minWidth, maxWidth, numFilters, hidden,
+        charV.size, tv.size, loaded.matrix, seed ^ Embeddings.fnv1a("weights:" + lg))
+      lg -> LangModel(lg, inputV, charV, tv, w)
+    }.toMap
   }
 }

@@ -73,4 +73,17 @@ class ModelsSpec extends SparkSpec {
       }
     } finally positioned.unpersist()
   }
+
+  test("Models.build and the prep aggregate run on generated code only (no interpreted fallback)") {
+    import spark.implicits._
+    val key = "spark.sql.codegen.factoryMode"
+    val was = spark.conf.getOption(key)
+    spark.conf.set(key, "CODEGEN_ONLY")
+    try {
+      val sentences = spark.createDataset(corpus)
+      assert(Models.build(spark, sentences).keySet == Set("en", "de"))
+      val units = Models.units(Models.positionedTokens(sentences), aliases = true)
+      assert(units.map(_.kind).toSet == Set(Models.CharUnit, Models.WordUnit, Models.AliasUnit))
+    } finally was.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
